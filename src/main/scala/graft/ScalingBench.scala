@@ -36,8 +36,8 @@ object ScalingBench {
         val o = oriented().persist()
         TriangleCount.globalAdjacency(spark, o, GraphCore.adjacency(o).persist())
       }),
-      // the out-of-core fallback, forced to 4 shards with 2 pair jobs in
-      // flight (resident adjacency ≤ 4 blocks = the full CSR at 4 shards;
+      // the out-of-core fallback, forced to 4 shards with 2 block pairs per
+      // wave job (resident adjacency ≤ 4 blocks = the full CSR at 4 shards;
       // production sizes shards so concurrency × 2 blocks fit) — evidences
       // that the beyond-executor-memory plan also completes and scales
       "triangles_sharded" -> (() => {
@@ -45,9 +45,9 @@ object ScalingBench {
         TriangleCount.globalAdjacencySharded(spark, o,
           GraphCore.adjacency(o).persist(), 4, concurrency = 2)
       }),
-      // per-vertex out-of-core twin with the same pair-job pool: its K is
-      // strictly larger (a vertex-sized credit checkpoint per pair), so the
-      // pool matters more here — the W/K row beside triangles_sharded
+      // per-vertex out-of-core twin with the same waves: its K is
+      // strictly larger (a vertex-sized credit checkpoint per wave), so the
+      // wave width matters more here — the W/K row beside triangles_sharded
       "pv_sharded" -> (() => {
         val o = oriented().persist()
         TriangleCount.perVertexAdjacencySharded(spark, edges, o,
@@ -90,7 +90,7 @@ object ScalingBench {
       // round-6 verdict #1 proof-at-scale: the per-edge support kernel with its
       // NEW broadcast-budget auto-select, run at the input whose ~1.14 GB
       // adjacency proved the old unconditional broadcast aborts on
-      // maxResultSize — the probe must degrade to edgeSupportSharded and
+      // maxResultSize — the probe must degrade to sharded tiles and
       // complete (same contract as the triangles_adj auto-select row)
       "edge_support_auto" -> (() => {
         val o = oriented().persist()
@@ -148,7 +148,7 @@ object ScalingBench {
     val full = TriangleCount.globalAdjacency(spark, o, adj).first().getLong(0)
     val shd = TriangleCount.globalAdjacencySharded(spark, o, adj, shards).first().getLong(0)
     val pvB = TriangleCount.perVertexAdjacency(edges, o, adj)
-    // concurrency 2: the equality evidence also covers the pooled merge path
+    // concurrency 2: the equality evidence also covers the merge across waves
     val pvS = TriangleCount.perVertexAdjacencySharded(spark, edges, o, adj, shards,
       concurrency = 2)
     val pvDiff = pvB.withColumnRenamed("tri_cnt", "b")

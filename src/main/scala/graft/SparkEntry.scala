@@ -125,8 +125,8 @@ object SparkEntry {
     }),
     // the out-of-core escape of the headline kernel (reference's 2D chunk-pair
     // split, gpu.cu:27-58), forced to 3 shards here so the driver value-checks
-    // the path globalAdjacency auto-selects once the CSR outgrows an executor
-    // concurrency 2: the driver value-checks the pooled pair-job path
+    // the path globalAdjacency auto-selects once the CSR outgrows an executor;
+    // concurrency 2: the oracle check also covers waves of two block pairs
     "triangles_adj_sharded" -> ((s, d) => {
       val o = orientedOf(s, d)
       TriangleCount.globalAdjacencySharded(s, o, CacheTracker.persist(GraphCore.adjacency(o)), 3,
@@ -144,9 +144,9 @@ object SparkEntry {
       TriangleCount.perVertexAdjacency(canonical(s, d), o,
         CacheTracker.persist(GraphCore.adjacency(o)))
     }),
-    // out-of-core per-vertex twin (forced 3 shards, pooled) — credit partials
-    // roll up per block pair, so no job ever holds more than two adjacency
-    // blocks; concurrency 2 value-checks the pooled associative merge
+    // out-of-core per-vertex twin (forced 3 shards) — credit partials roll up
+    // per wave of two block pairs, so no job ever holds more than four adjacency
+    // blocks; concurrency 2 value-checks the associative merge across waves
     "triangles_per_vertex_sharded" -> ((s, d) => {
       val o = orientedOf(s, d)
       TriangleCount.perVertexAdjacencySharded(s, canonical(s, d), o,

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.expr.SortedIntersectCount
@@ -12,24 +12,31 @@ import graft.expr.SortedIntersectCount
   *
   * Two physical shapes, identical results:
   *
-  *  - [[globalRelational]]: a pure 3-way equi self-join on the oriented edge table —
+  *  - Relational ([[globalRelational]], [[perVertex]], [[globalPerKey]],
+  *    [[globalSampled]]): a pure 3-way equi self-join on the oriented edge table —
   *    fully declarative, Catalyst plans the join order/strategies, and it is directly
   *    oracle-checkable in ANSI SQL. Wedge fan-out is bounded by the orientation
   *    invariant (out-degree ≤ O(√m), report.md:9) → O(m^1.5) worst-case work, the
   *    same bound as the reference kernel.
   *
-  *  - [[globalAdjacency]]: the reference's actual physical shape — the CSR-style
-  *    adjacency is BROADCAST (every reference rank holds the full graph), the
-  *    oriented edge stream hash-probes it twice (src and dst sides) and runs the
-  *    two-pointer sorted merge ([[graft.expr.SortedIntersectCount]], a codegen'd
-  *    Catalyst expression) per edge inside the same stage, then one partial+final
-  *    sum (the Spark analog of OpenMP `reduction(+:sum)` at
-  *    TrCountingGraph.cpp:389 and `thrust::reduce` at gpu-thrust.cu:24-27).
-  *    Neighbor arrays never enter a shuffle or sort — the round-1 shuffled-join
-  *    variant shipped BOTH arrays with every edge row and spilled ~0.3 TB on a
-  *    32M-edge input. When the adjacency exceeds executor memory
-  *    (`broadcastAdj = false` escape hatch), shard the edge set and broadcast per
-  *    shard — the reference's multi-GPU chunk split (main.cpp:87-120).
+  *  - Adjacency: ONE tiling core ([[tiled]]) serves the four adjacency kernels
+  *    (global count, per-vertex counts, per-edge support, per-edge membership).
+  *    It yields probed rows (src, dst, nbrs_u, nbrs_v): the oriented edge stream
+  *    hash-probes the BROADCAST CSR-style adjacency twice (src and dst sides)
+  *    inside one codegen stage — neighbor arrays never enter a shuffle or sort.
+  *    Each kernel is only a [[Kernel]]: key columns plus a credit function over
+  *    the probed rows; credits are summed per key and left-joined onto the key
+  *    universe. The tiling is either
+  *      - the 1×1 tile: the whole adjacency broadcast (every reference rank holds
+  *        the full graph), or
+  *      - sharded tiles when the adjacency exceeds the broadcast budget — the
+  *        reference's out-of-core chunk-pair split kernel (gpu.cu:27-58, chosen
+  *        at main.cpp:85-97): vertices cut into [[GraphCore.csrBlocks]] ranges,
+  *        and each wave of `concurrency` non-empty block pairs runs as one Spark
+  *        job that broadcasts only the blocks those pairs touch (≤ 2 ×
+  *        concurrency blocks resident). Wave partials fold through one
+  *        [[CreditAccumulator]].
+  *    The auto-select between the two ([[autoTiles]]) runs once per call.
   */
 object TriangleCount {
 
@@ -131,58 +138,202 @@ object TriangleCount {
       .select(col("v"), coalesce(col("cnt"), lit(0L)).as("tri_cnt"))
   }
 
-  /** Per-vertex counts in the adjacency (scale-path) form: for each oriented edge
+  // --- adjacency kernels: thin wrappers over the tiling core ------------------
+
+  /** Global triangle count via adjacency-list intersection (the reference's
+    * physical shape): [[SortedIntersectCount]], the codegen two-pointer merge,
+    * per probed edge, then one partial+final sum (the Spark analog of OpenMP
+    * `reduction(+:sum)` at TrCountingGraph.cpp:389 and `thrust::reduce` at
+    * gpu-thrust.cu:24-27). `adj` must be [[GraphCore.adjacency]] of `oriented`.
+    * Output: single row (triangles: long). */
+  def globalAdjacency(spark: SparkSession, oriented: DataFrame, adj: DataFrame): DataFrame =
+    tiled(oriented, adj, globalKernel, autoTiles(adj))
+
+  /** [[globalAdjacency]] on `shards` × `shards` block-pair tiles, `concurrency`
+    * pairs per wave job. */
+  def globalAdjacencySharded(spark: SparkSession, oriented: DataFrame, adj: DataFrame,
+      shards: Int, concurrency: Int = 1): DataFrame =
+    tiled(oriented, adj, globalKernel, Some(Tiles(shards, concurrency)))
+
+  /** Per-vertex triangle counts in the adjacency form: for each oriented edge
     * (u,v), every w ∈ N⁺(u) ∩ N⁺(v) closes one triangle {u,v,w} — u, v and w each
-    * get one credit. Materializes only the actual intersection elements (O(#triangles)
-    * rows), never the O(m^1.5) wedge set of the relational form. Results identical
-    * to [[perVertex]]. */
-  def perVertexAdjacency(
-      canonical: DataFrame,
-      oriented: DataFrame,
-      adj: DataFrame,
-      broadcastAdj: Boolean = true,
-      maxBroadcastBytes: Long = AutoBroadcastBytes): DataFrame = {
-    if (broadcastAdj) {
-      // same auto-select contract as [[globalAdjacency]]: beyond the broadcast
-      // budget, fall through to the chunk-pair sharded form
-      ensurePersisted(adj) // the size probe is an eager agg; the plan reads adj twice more
-      val budget = resolveMaxBroadcastBytes(adj.sparkSession, maxBroadcastBytes)
-      val bytes = adjacencyBytes(adj)
-      if (bytes > budget) {
-        val conc = resolvePairConcurrency(adj.sparkSession)
-        val shards = autoShards(bytes, resolveShardBudget(budget, conc))
-        System.err.println(s"[TriangleCount] adjacency ≈ $bytes B > broadcast budget $budget B" +
-          s" — auto-selecting the per-vertex sharded kernel ($shards shards, $conc pair jobs)")
-        return perVertexAdjacencySharded(
-          canonical.sparkSession, canonical, oriented, adj, shards, concurrency = conc)
-      }
-    }
-    // broadcast by default for the same reason as [[globalAdjacency]]
-    def side(a: DataFrame) = if (broadcastAdj) broadcast(a) else a
-    val adjU = side(adj.select(col("v").as("src"), col("nbrs").as("nbrs_u")))
-    val adjV = side(adj.select(col("v").as("dst"), col("nbrs").as("nbrs_v")))
-    val withW = oriented
-      .join(adjU, "src")
-      .join(adjV, "dst")
-      .select(col("src"), col("dst"),
-        array_intersect(col("nbrs_u"), col("nbrs_v")).as("ws"))
-      .where(size(col("ws")) > 0)
-      .transform(graft.CacheTracker.persist)
-    val endpointCredits = withW
-      .select(col("src").as("v"), size(col("ws")).cast("long").as("c"))
-      .unionAll(withW.select(col("dst").as("v"), size(col("ws")).cast("long").as("c")))
-    val witnessCredits = withW
-      .select(explode(col("ws")).as("v"), lit(1L).as("c"))
-    val corners = endpointCredits.unionAll(witnessCredits)
-      .groupBy("v").agg(sum("c").as("cnt"))
-    GraphCore.vertices(canonical)
-      .join(corners, Seq("v"), "left")
-      .select(col("v"), coalesce(col("cnt"), lit(0L)).as("tri_cnt"))
+    * get one credit. Materializes only the actual intersection elements
+    * (O(#triangles) rows), never the O(m^1.5) wedge set of the relational form.
+    * Output (v, tri_cnt), zero rows included — identical to [[perVertex]]. */
+  def perVertexAdjacency(canonical: DataFrame, oriented: DataFrame, adj: DataFrame): DataFrame =
+    tiled(oriented, adj, vertexKernel(canonical), autoTiles(adj))
+
+  /** [[perVertexAdjacency]] on `shards` × `shards` block-pair tiles. */
+  def perVertexAdjacencySharded(spark: SparkSession, canonical: DataFrame, oriented: DataFrame,
+      adj: DataFrame, shards: Int, concurrency: Int = 1): DataFrame =
+    tiled(oriented, adj, vertexKernel(canonical), Some(Tiles(shards, concurrency)))
+
+  /** Per-edge triangle support: |N⁺(u) ∩ N⁺(v)| for EVERY oriented edge (u, v),
+    * zero rows included — the per-edge refinement of the global count
+    * (Σ support = triangles). Output (src, dst, support). */
+  def edgeSupport(spark: SparkSession, oriented: DataFrame, adj: DataFrame): DataFrame =
+    tiled(oriented, adj, supportKernel(oriented), autoTiles(adj))
+
+  /** Per-edge triangle MEMBERSHIP counts — each triangle {u,v,w} credits ALL
+    * THREE of its edges (Σ tri_cnt = 3·triangles), unlike [[edgeSupport]]'s
+    * base-edge counts (Σ = triangles). This is the k-truss peel criterion.
+    * Under the acyclic orientation u→v, u→w, v→w, the witness rows of base
+    * edge (u,v) credit (u,v), (u,w) and (v,w) — all of them oriented edges.
+    * Output (src, dst, tri_cnt), zero rows included. */
+  def edgeTriangleCounts(spark: SparkSession, oriented: DataFrame, adj: DataFrame): DataFrame =
+    tiled(oriented, adj, membershipKernel(oriented), autoTiles(adj))
+
+  // --- kernels: key columns + a credit function over probed rows --------------
+
+  /** One adjacency kernel. `credit` maps probed rows (src, dst, nbrs_u, nbrs_v)
+    * to (keys…, cnt) rows; `finish` turns the per-key credit sums (keys…, cnt)
+    * into the output — a left join onto the key universe with zeros filled in.
+    * The global count has no key: its sum is a single row, its own universe. */
+  private[graft] final case class Kernel(
+      keys: Seq[String], credit: DataFrame => DataFrame, finish: DataFrame => DataFrame)
+
+  private def intersectCount: Column =
+    call_function(SortedIntersectCount.name, col("nbrs_u"), col("nbrs_v"))
+
+  /** One row (src, dst, w) per triangle, w the third corner. */
+  private def witnesses(probed: DataFrame): DataFrame =
+    probed.select(col("src"), col("dst"),
+      explode(array_intersect(col("nbrs_u"), col("nbrs_v"))).as("w"))
+
+  private def onto(universe: DataFrame, out: String)(sums: DataFrame): DataFrame = {
+    val keys = universe.columns.toSeq
+    universe.join(sums, keys, "left")
+      .select(keys.map(col) :+ coalesce(col("cnt"), lit(0L)).as(out): _*)
   }
 
-  /** Sentinel for `maxBroadcastBytes` parameters: resolve the budget from the
-    * session via [[resolveMaxBroadcastBytes]]. */
-  val AutoBroadcastBytes: Long = -1L
+  private[graft] val globalKernel = Kernel(Nil,
+    _.select(intersectCount.as("cnt")),
+    _.select(coalesce(col("cnt"), lit(0L)).as("triangles")))
+
+  private[graft] def vertexKernel(canonical: DataFrame) = Kernel(Seq("v"),
+    // ONE explode into the three corners, as [[perVertex]] does
+    witnesses(_).select(explode(array(col("src"), col("dst"), col("w"))).as("v"), lit(1L).as("cnt")),
+    onto(GraphCore.vertices(canonical), "tri_cnt"))
+
+  private[graft] def supportKernel(oriented: DataFrame) = Kernel(Seq("src", "dst"),
+    _.select(col("src"), col("dst"), intersectCount.as("cnt")),
+    onto(oriented.select(col("src"), col("dst")), "support"))
+
+  private[graft] def membershipKernel(oriented: DataFrame) = {
+    def edge(a: String, b: String) = struct(col(a).as("src"), col(b).as("dst"))
+    Kernel(Seq("src", "dst"),
+      witnesses(_)
+        .select(explode(array(edge("src", "dst"), edge("src", "w"), edge("dst", "w"))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst"), lit(1L).as("cnt")),
+      onto(oriented.select(col("src"), col("dst")), "tri_cnt"))
+  }
+
+  // --- the tiling core --------------------------------------------------------
+
+  /** Sharded tiling: `shards` vertex blocks, `concurrency` block pairs per wave. */
+  private[graft] final case class Tiles(shards: Int, concurrency: Int) {
+    require(shards >= 1, "shards must be positive")
+    require(concurrency >= 1, "concurrency must be positive")
+  }
+
+  /** Wave partials that batch up before one merge folds them into the
+    * [[CreditAccumulator]] (BENCH.md §round-6 measured 8). */
+  private[graft] val MergeFanIn: Int = 8
+
+  /** Run `kernel` over `tiles` (None = the 1×1 tile) and finish it. */
+  private[graft] def tiled(oriented: DataFrame, adj: DataFrame, kernel: Kernel,
+      tiles: Option[Tiles]): DataFrame = {
+    SortedIntersectCount.register(oriented.sparkSession)
+    val sums = tiles match {
+      case None => keyedSum(kernel.keys, kernel.credit(probe(oriented, adj, adj)))
+      case Some(t) =>
+        // each wave partial is materialized (eager localCheckpoint) by its own
+        // job, so only that wave's broadcast blocks are ever resident
+        val acc = new CreditAccumulator(kernel.keys, MergeFanIn)
+        waves(oriented, adj, t).foreach(p =>
+          acc.add(keyedSum(kernel.keys, kernel.credit(p)).localCheckpoint(true)))
+        acc.result().getOrElse(keyedSum(kernel.keys, oriented.sparkSession.range(0)
+          .select((kernel.keys :+ "cnt").map(col("id").as(_)): _*)))
+    }
+    kernel.finish(sums)
+  }
+
+  /** Σ cnt per key: the merge of credits within a wave and across waves. */
+  private def keyedSum(keys: Seq[String], credits: DataFrame): DataFrame =
+    credits.groupBy(keys.map(col): _*).agg(sum(col("cnt")).as("cnt"))
+
+  /** THE broadcast probe: `edges` (src, dst, …) hash-probe the broadcast `srcAdj`
+    * on src and `dstAdj` on dst. Inner joins: an edge whose dst has out-degree 0
+    * closes no triangle (the kernel's left join restores its zero row). */
+  private[graft] def probe(edges: DataFrame, srcAdj: DataFrame, dstAdj: DataFrame): DataFrame =
+    edges
+      .join(broadcast(srcAdj.select(col("v").as("src"), col("nbrs").as("nbrs_u"))), "src")
+      .join(broadcast(dstAdj.select(col("v").as("dst"), col("nbrs").as("nbrs_v"))), "dst")
+
+  /** Sharded tiles as probed rows, one frame per wave. Each oriented edge (u, v)
+    * belongs to block pair (block(u), block(v)) and so to exactly one wave; a
+    * wave of ≤ `concurrency` non-empty pairs broadcasts only the src blocks and
+    * dst blocks those pairs name — ≤ 2 × concurrency blocks, the same bound the
+    * reference's chunk-pair launches keep, while the edge table (persisted,
+    * block-tagged) is rescanned per wave the way the reference re-reads its
+    * edge list per chunk pair. Adjacency blocks are re-broadcast ≤ 2·shards
+    * times: the price of never holding the full CSR. */
+  private[graft] def waves(oriented: DataFrame, adj: DataFrame, t: Tiles): Iterator[DataFrame] = {
+    // checkpointed: the O(vertices) block table cuts csrBlocks' window and join
+    // lineage, which every wave plan would otherwise re-analyze (about half
+    // of a wave's time on a 7-shard test graph)
+    val blocks = GraphCore.csrBlocks(adj, t.shards).select(col("v"), col("block")).localCheckpoint(true)
+    // (v, nbrs, block): the CSR with its block id — filtered per wave
+    val adjB = CacheTracker.persist(adj.join(blocks, "v").select(col("v"), col("nbrs"), col("block")))
+    // (src, dst, pair = bs·shards + bd): edges tagged with both endpoint
+    // blocks. A dst with out-degree 0 has no adjacency row — its edges drop
+    // here, exactly as the probe's inner joins drop them.
+    val eB = CacheTracker.persist(oriented
+      .join(blocks.select(col("v").as("src"), col("block").as("bs")), "src")
+      .join(blocks.select(col("v").as("dst"), col("block").as("bd")), "dst")
+      .select(col("src"), col("dst"), (col("bs") * t.shards + col("bd")).as("pair")))
+    val pairs = eB.select(col("pair")).distinct().collect().map(_.getLong(0)).sorted // ≤ shards²
+    // wave ids enter the plan as array literals, which codegen passes by
+    // reference: every wave reuses the first wave's compiled code
+    def in(c: String, ids: Seq[Long]) = array_contains(typedLit(ids.distinct), col(c))
+    pairs.grouped(t.concurrency).map(_.toSeq).map { wave =>
+      probe(eB.where(in("pair", wave)),
+        adjB.where(in("block", wave.map(_ / t.shards))), adjB.where(in("block", wave.map(_ % t.shards))))
+    }
+  }
+
+  /** Rolling keyed sum of wave partials — the one merge of every adjacency
+    * kernel (global is the empty key; disjoint support partials are a special
+    * case). Re-aggregating the whole accumulator per wave would be a full
+    * shuffle + lineage truncation per wave — pure fixed cost — so partials
+    * batch up to `fanIn` before ONE merge folds accumulator + batch. Credits
+    * are sums, so the merge is associative-commutative. Resident state: ≤ fanIn
+    * materialized partials (each holding only the keys one wave credited) + 1
+    * accumulator. */
+  private[graft] final class CreditAccumulator(keyCols: Seq[String], fanIn: Int) {
+    require(fanIn >= 1, "fanIn must be positive")
+    private var acc: DataFrame = null
+    private val pending = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def add(partial: DataFrame): Unit = {
+      pending += partial
+      if (pending.size >= fanIn) flush()
+    }
+    private def flush(): Unit = {
+      // a lone first partial is already keyed-summed by its wave job —
+      // adopting it directly skips a no-op shuffle
+      if (acc == null && pending.sizeIs == 1) acc = pending.head
+      else acc = keyedSum(keyCols, (Option(acc) ++ pending).reduce(_ unionAll _))
+        .localCheckpoint(true)
+      pending.clear()
+    }
+    /** Final accumulator; None when no partial was ever added. */
+    def result(): Option[DataFrame] = {
+      if (pending.nonEmpty) flush()
+      Option(acc)
+    }
+  }
+
+  // --- the auto-select: broadcast budget vs adjacency size --------------------
 
   /** Cap of the auto-derived broadcast budget when the session carries no
     * executor sizing (2 GiB: a quarter of Spark's own 8 GiB broadcast-table
@@ -190,73 +341,43 @@ object TriangleCount {
     * fit a typical executor). */
   val defaultMaxBroadcastBytes: Long = 2L << 30
 
-  /** Pair jobs in flight when an auto-selected sharded kernel runs — each job is
-    * itself distributed, so the pool only overlaps fixed broadcast-build cost;
-    * resident adjacency is bounded by 2 × this many blocks. Override per session
-    * with `spark.graft.pairConcurrency`. */
+  /** Block pairs per wave job when the auto-select shards — resident adjacency is
+    * bounded by 2 × this many blocks. Override per session with
+    * `spark.graft.pairConcurrency`. */
   val defaultPairConcurrency: Int = 4
 
   private[graft] def resolvePairConcurrency(spark: SparkSession): Int =
     spark.conf.getOption("spark.graft.pairConcurrency")
       .map(_.toInt).getOrElse(defaultPairConcurrency)
 
-  /** How many per-pair credit partials batch up before one merge folds them
-    * into the accumulator of [[perVertexAdjacencySharded]] /
-    * [[edgeTriangleCountsSharded]]. 1 restores the merge-per-pair behavior.
-    * Override per session with `spark.graft.shardMergeFanIn`. */
-  val defaultShardMergeFanIn: Int = 8
-
-  private[graft] def resolveMergeFanIn(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.shardMergeFanIn")
-      .map(_.toInt).getOrElse(defaultShardMergeFanIn)
-
-  /** Rolling accumulator for OVERLAPPING per-pair credit partials (vertex- or
-    * edge-keyed sums). Pair jobs hand in already-materialized
-    * (`localCheckpoint(true)`) partials; re-aggregating the whole accumulator
-    * once per pair is a full shuffle + lineage truncation per pair job — pure
-    * fixed cost (it re-aggregates mostly-unchanged rows, measured ~1/3 of the
-    * per-pair overhead at sf0.1 and part of the 141M-edge K term). Instead,
-    * partials batch up to `fanIn` before ONE merge folds accumulator + batch.
-    * Credits are sums, so the merge is associative-commutative and completion
-    * order cannot change the result. Resident state: ≤ fanIn materialized
-    * partials (each holding only the keys credited by one block pair) + 1
-    * accumulator — still bounded, now conf-tunable (fanIn 1 ⇒ the old
-    * merge-per-pair bound). */
-  private[graft] final class CreditAccumulator(keyCols: Seq[String], fanIn: Int) {
-    require(fanIn >= 1, "fanIn must be positive")
-    private var acc: DataFrame = null
-    private val pending = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def add(partial: DataFrame): Unit = synchronized {
-      pending += partial
-      if (pending.size >= fanIn) flush()
-    }
-    private def flush(): Unit = {
-      // a lone first partial is already (key, cnt)-aggregated by its pair job —
-      // adopting it directly skips a no-op shuffle
-      if (acc == null && pending.sizeIs == 1) acc = pending.head
-      else acc = (Option(acc) ++ pending).reduce(_ unionAll _)
-        .groupBy(keyCols.map(col): _*).agg(sum(col("cnt")).as("cnt"))
-        .localCheckpoint(true)
-      pending.clear()
-    }
-    /** Final accumulator; None when no partial was ever added. */
-    def result(): Option[DataFrame] = synchronized {
-      if (pending.nonEmpty) flush()
-      Option(acc)
+  /** The 1×1 tile when the adjacency fits the broadcast budget, else sharded
+    * tiles sized so a wave's blocks fit it — the reference's own out-of-core
+    * escape (main.cpp:85-97 picks the split kernel when `12m > GPU_mem`). */
+  private def autoTiles(adj: DataFrame): Option[Tiles] = {
+    val spark = adj.sparkSession
+    ensurePersisted(adj) // the size probe is an eager agg; the plan reads adj twice more
+    val budget = resolveMaxBroadcastBytes(spark)
+    val bytes = adjacencyBytes(adj)
+    if (bytes <= budget) None
+    else {
+      val conc = resolvePairConcurrency(spark)
+      val shards = autoShards(bytes, resolveShardBudget(budget, conc))
+      System.err.println(s"[TriangleCount] adjacency ≈ $bytes B > broadcast budget $budget B" +
+        s" — auto-selecting sharded tiles ($shards shards, $conc pairs per wave)")
+      Some(Tiles(shards, conc))
     }
   }
 
-  /** Resolve the broadcast budget for the sharded auto-select. Priority:
-    * explicit non-negative argument > session conf `spark.graft.maxBroadcastBytes`
+  /** Resolve the broadcast budget for the auto-select. Priority:
+    * session conf `spark.graft.maxBroadcastBytes`
     * (size string, e.g. "512m") > derived from `spark.executor.memory` ×
     * `spark.memory.fraction` × 1/4 (two blocks + two broadcast hash maps live per
-    * pair job), capped at [[defaultMaxBroadcastBytes]]. When the session carries
+    * wave), capped at [[defaultMaxBroadcastBytes]]. When the session carries
     * NO executor sizing (local mode — the driver JVM is the executor), the
     * basis is the ACTUAL runtime heap, not a fixed floor: round 5 found the
     * old 2 GiB floor auto-selecting a ~1.2 GB adjacency broadcast inside an
     * 8 GB local JVM that could not hold the relation plus the persisted edge
-    * table — exactly the OOM the auto-select exists to prevent. A budget
-    * derived from `Runtime.maxMemory` degrades to the sharded kernel instead.
+    * table — exactly the OOM the auto-select exists to prevent.
     *
     * The derived budget is additionally bounded by 3/4 of
     * `spark.driver.maxResultSize` (default 1g; 0 = unlimited): building a
@@ -266,10 +387,9 @@ object TriangleCount {
     * (1056.4 MiB of task results vs the 1024 MiB default) on a 141M-edge
     * adjacency that passed the heap-derived budget. The 3/4 margin covers
     * Catalyst's size estimate vs the serialized task-result bytes disagreeing
-    * in either direction. Explicit overrides (argument / session conf) are
-    * honored as given — they are the operator's own knob. */
-  private[graft] def resolveMaxBroadcastBytes(spark: SparkSession, requested: Long): Long = {
-    if (requested >= 0) return requested
+    * in either direction. The session conf is honored as given — it is the
+    * operator's own knob. */
+  private[graft] def resolveMaxBroadcastBytes(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.maxBroadcastBytes") match {
       case Some(s) => org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
       case None =>
@@ -288,26 +408,20 @@ object TriangleCount {
         val resultCap = if (maxResult > 0L) maxResult * 3 / 4 else Long.MaxValue
         math.min(math.min(defaultMaxBroadcastBytes, resultCap), (execMem * frac / 4).toLong)
     }
-  }
 
-  /** Block budget for the SHARDED path's `autoShards` sizing. The broadcast-mode
+  /** Block budget for the sharded tiles' `autoShards` sizing. The broadcast-mode
     * budget assumes two resident copies of the relation (adjU + adjV, each
     * roughly doubled in memory by the broadcast build — hence the /4 in
-    * [[resolveMaxBroadcastBytes]]); a pair-job pool instead holds
-    * `concurrency × 2` block broadcasts live, so the per-pair block budget must
-    * shrink by concurrency/2 or the pool overcommits the same heap the budget
-    * was derived from. Round 5 measured exactly that: 3 shards × 4 pool jobs =
-    * 8 live ~380 MB block broadcasts OOMing the 8 GB JVM whose budget said the
-    * plan fit. Explicit `spark.graft.maxBroadcastBytes` overrides flow through
-    * here too — the invariant is about what is RESIDENT, not how the budget was
-    * chosen. */
+    * [[resolveMaxBroadcastBytes]]); a wave instead holds `concurrency × 2`
+    * blocks live, so the per-block budget must shrink by concurrency/2 or the
+    * wave overcommits the same heap the budget was derived from. Round 5
+    * measured exactly that: 3 shards × 4 concurrent pairs = 8 live ~380 MB
+    * block broadcasts OOMing the 8 GB JVM whose budget said the plan fit. The
+    * ceiling division keeps odd widths within the ≤2×-budget resident bound. */
   private[graft] def resolveShardBudget(budget: Long, concurrency: Int): Long =
-    // CEILING division of the pool width (round-5 advice): floor let odd widths
-    // overshoot the documented ≤2×-budget resident bound (concurrency 3 left
-    // the budget undivided → ~3× resident; 7 gave ~2.33×)
     math.max(1L, budget / math.max(1, (concurrency + 1) / 2))
 
-  /** Shard cap: bounds the ≤ shards² pair-job count (the reference's split
+  /** Shard cap: bounds the ≤ shards² block-pair count (the reference's split
     * kernel enumerates the same split_num² chunk pairs, main.cpp:87-90). */
   private[graft] val maxShards = 1024L
 
@@ -328,7 +442,7 @@ object TriangleCount {
   }
 
   /** Persist-and-track `adj` unless the caller already did: the auto-select size
-    * probe below is an EAGER aggregation, and the kernel plan then reads the
+    * probe is an EAGER aggregation, and the kernel plan then reads the
     * adjacency from both broadcast sides — unpersisted, the whole adjacency
     * aggregation would run twice (round-3 advice: external callers on the old
     * lazy contract silently doubled their work). */
@@ -343,445 +457,6 @@ object TriangleCount {
       coalesce(sum(col("deg")), lit(0L)).as("m"),
       count(lit(1)).as("n")).first()
     r.getLong(0) * 8L + r.getLong(1) * 24L
-  }
-
-  /** Run pair jobs with `concurrency` in flight (1 ⇒ strictly sequential, no
-    * pool). Failure path (round-3 advice): queued jobs are DROPPED
-    * (`shutdownNow`), the in-flight Spark jobs of the shared group are
-    * cancelled, and the pool is awaited before the first failure propagates —
-    * a failed pair job never leaves stragglers burning the cluster or racing a
-    * subsequent cache release. */
-  private[graft] def runPairJobs(spark: SparkSession, concurrency: Int, jobs: Seq[() => Unit]): Unit = {
-    if (concurrency <= 1 || jobs.sizeIs <= 1) { jobs.foreach(_.apply()); return }
-    val gid = s"graft-pair-jobs-${java.util.UUID.randomUUID()}"
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(concurrency)
-    try {
-      val tasks = jobs.map { job =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = {
-            // job group is thread-local: tag this worker's Spark jobs so the
-            // failure path can cancel them as a group
-            spark.sparkContext.setJobGroup(gid, "graft sharded pair job", interruptOnCancel = true)
-            try job() finally spark.sparkContext.clearJobGroup()
-          }
-        })
-      }
-      try tasks.foreach(_.get())
-      catch {
-        case e: Throwable =>
-          pool.shutdownNow()
-          try spark.sparkContext.cancelJobGroup(gid) catch { case _: Throwable => () }
-          throw (e match {
-            case ee: java.util.concurrent.ExecutionException if ee.getCause != null => ee.getCause
-            case other => other
-          })
-      }
-    } finally {
-      pool.shutdown()
-      pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
-    }
-  }
-
-  /** Global triangle count via adjacency-list intersection (the reference's physical
-    * shape). `adj` must be [[GraphCore.adjacency]] of `oriented`.
-    *
-    * With `broadcastAdj = true` (default — the reference-faithful layout: every
-    * MPI rank holds the FULL graph, main.cpp/TrCountingGraph replicate the CSR
-    * per rank) the adjacency is broadcast and the edge stream flows through two
-    * broadcast hash joins + the merge count inside ONE codegen stage — neighbor
-    * arrays never enter a shuffle or sort. When the estimated adjacency exceeds
-    * `maxBroadcastBytes`, the call AUTO-SELECTS [[globalAdjacencySharded]] — the
-    * reference's own out-of-core escape (main.cpp:85-97 picks the split kernel
-    * when `12m > GPU_mem`); every measured result is identical either way.
-    *
-    * The shuffled-join alternative (`broadcastAdj = false`) ships BOTH arrays
-    * with every edge row through a sort-merge join: measured on a 32M-edge graph
-    * that materializes ~0.3 TB of sort spill and exhausts local disk — kept only
-    * as the differential-test twin, never auto-selected. */
-  def globalAdjacency(
-      spark: SparkSession,
-      oriented: DataFrame,
-      adj: DataFrame,
-      broadcastAdj: Boolean = true,
-      maxBroadcastBytes: Long = AutoBroadcastBytes): DataFrame = {
-    SortedIntersectCount.register(spark)
-    if (broadcastAdj) {
-      ensurePersisted(adj) // the size probe is an eager agg; the plan reads adj twice more
-      val budget = resolveMaxBroadcastBytes(spark, maxBroadcastBytes)
-      val bytes = adjacencyBytes(adj)
-      if (bytes > budget) {
-        // 2 blocks live per pair job × pool width: size k to the POOL budget
-        val conc = resolvePairConcurrency(spark)
-        val shards = autoShards(bytes, resolveShardBudget(budget, conc))
-        System.err.println(s"[TriangleCount] adjacency ≈ $bytes B > broadcast budget $budget B" +
-          s" — auto-selecting the sharded kernel ($shards shards, $conc pair jobs in flight)")
-        return globalAdjacencySharded(spark, oriented, adj, shards, concurrency = conc)
-      }
-    }
-    def side(a: DataFrame) = if (broadcastAdj) broadcast(a) else a
-    val adjU = side(adj.select(col("v").as("src"), col("nbrs").as("nbrs_u")))
-    val adjV = side(adj.select(col("v").as("dst"), col("nbrs").as("nbrs_v")))
-    oriented
-      .join(adjU, "src")
-      .join(adjV, "dst")
-      .select(call_function(SortedIntersectCount.name, col("nbrs_u"), col("nbrs_v")).as("cnt"))
-      .agg(coalesce(sum(col("cnt")), lit(0L)).as("triangles"))
-  }
-
-  /** Out-of-core (sharded-broadcast) global triangle count — the Spark analog of
-    * the reference's 2D chunk-pair split kernel (gpu.cu:27-58
-    * `CalculateTrianglesSplit_v2` iterates `split_num × split_num` chunk pairs;
-    * main.cpp:85-97 selects it when the CSR exceeds device memory).
-    *
-    * Vertices are cut into `shards` contiguous ranges carrying ~equal EDGES via
-    * [[GraphCore.csrBlocks]] (the `get_split_v2` semantics — oracle-checked).
-    * Each oriented edge (u, v) belongs to block pair (block(u), block(v)); for
-    * every NON-EMPTY pair (i, j) — at most shards², usually far fewer — one job
-    * broadcasts adjacency blocks i and j (≈ 2/shards of the full CSR, the only
-    * adjacency bytes resident at a time), probes them with that pair's edges
-    * inside one codegen stage, and reduces to a scalar partial. Partials sum on
-    * the driver — the analog of the reference's sequential chunk-pair kernel
-    * launches + `thrust::reduce`. Neighbor arrays never enter a shuffle in any
-    * pair job. Edge rows carry only (src, dst, two block ids): the edge table is
-    * rescanned per pair from its persisted, block-filtered form, exactly like
-    * the reference re-reads its edge list per chunk pair.
-    *
-    * Total work: each edge is processed in exactly one pair job (each triangle
-    * counted once); adjacency blocks are re-broadcast ≤ 2·shards times, the
-    * price of never holding the full CSR — the same trade the reference makes.
-    *
-    * Job count is ≤ shards² (the reference's split kernel enumerates the same
-    * split_num² chunk pairs, main.cpp:87-90) — so size `maxBroadcastBytes` to
-    * the executor budget and keep shards in the tens-to-hundreds; the
-    * auto-select cap of 1024 shards bounds the worst case. At MPI-like scale
-    * the reference divides the pair list across ranks; the Spark analog — a
-    * small pool of concurrent pair jobs (each itself distributed, memory bound
-    * = pool × 2 blocks) — is a scheduler knob on top of this same plan. */
-  def globalAdjacencySharded(
-      spark: SparkSession,
-      oriented: DataFrame,
-      adj: DataFrame,
-      shards: Int,
-      concurrency: Int = 1): DataFrame = {
-    require(shards >= 1, "shards must be positive")
-    require(concurrency >= 1, "concurrency must be positive")
-    SortedIntersectCount.register(spark)
-    val blocks = GraphCore.csrBlocks(adj, shards).select(col("v"), col("block"))
-    // (v, nbrs, block): the CSR with its block id — filtered per pair job
-    val adjB = CacheTracker.persist(adj.join(blocks, "v").select(col("v"), col("nbrs"), col("block")))
-    // (src, dst, bs, bd): edges tagged with both endpoint blocks. A dst with
-    // out-degree 0 has no adjacency row — its edges close no triangle and drop
-    // here, exactly as the broadcast form's inner adjacency join drops them.
-    val eB = CacheTracker.persist(oriented
-      .join(blocks.select(col("v").as("src"), col("block").as("bs")), "src")
-      .join(blocks.select(col("v").as("dst"), col("block").as("bd")), "dst")
-      .select(col("src"), col("dst"), col("bs"), col("bd")))
-    val present = eB.groupBy("bs", "bd").agg(count(lit(1)))
-      .select(col("bs"), col("bd")).collect() // ≤ shards² coordinates — tiny
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(identity)
-    // `concurrency` pair jobs in flight at once (the Spark analog of the
-    // reference dividing the chunk-pair list across MPI ranks,
-    // main.cpp:87-90): each job is itself distributed, so the pool only
-    // overlaps their fixed broadcast-build/schedule cost. Resident adjacency
-    // is bounded by concurrency × 2 blocks — size `shards` accordingly.
-    val total = new java.util.concurrent.atomic.AtomicLong(0L)
-    runPairJobs(spark, concurrency, present.toSeq.map { case (i, j) => () =>
-      total.addAndGet(shardPairCount(eB, adjB, i, j).first().getLong(0)): Unit
-    })
-    import spark.implicits._
-    Seq(total.get()).toDF("triangles")
-  }
-
-  /** Out-of-core per-vertex triangle counts — the sharded-broadcast twin of
-    * [[perVertexAdjacency]], same 2D chunk-pair tiling as
-    * [[globalAdjacencySharded]]. Each pair job materializes its (v, cnt)
-    * credit partials (endpoint + witness credits of that pair's edges — longs,
-    * never arrays) into a [[CreditAccumulator]]: the merge that folds partials
-    * into the running total batches `spark.graft.shardMergeFanIn` partials per
-    * shuffle (round 6 — merging per pair re-aggregated the whole accumulator
-    * shards² times), so at any moment the resident state is
-    * concurrency × (2 adjacency blocks + 1 partial) + ≤ fanIn partials + 1
-    * vertex-sized count table. Results identical to [[perVertexAdjacency]]. */
-  def perVertexAdjacencySharded(
-      spark: SparkSession,
-      canonical: DataFrame,
-      oriented: DataFrame,
-      adj: DataFrame,
-      shards: Int,
-      concurrency: Int = 1): DataFrame = {
-    require(shards >= 1, "shards must be positive")
-    require(concurrency >= 1, "concurrency must be positive")
-    val blocks = GraphCore.csrBlocks(adj, shards).select(col("v"), col("block"))
-    val adjB = CacheTracker.persist(adj.join(blocks, "v").select(col("v"), col("nbrs"), col("block")))
-    val eB = CacheTracker.persist(oriented
-      .join(blocks.select(col("v").as("src"), col("block").as("bs")), "src")
-      .join(blocks.select(col("v").as("dst"), col("block").as("bd")), "dst")
-      .select(col("src"), col("dst"), col("bs"), col("bd")))
-    val present = eB.groupBy("bs", "bd").agg(count(lit(1)))
-      .select(col("bs"), col("bd")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(identity)
-    // Each pair job materializes its own credit partial (EAGER localCheckpoint:
-    // only that job's two broadcasts are ever live, and the lineage is cut),
-    // then hands it to the fan-in-batched accumulator (see CreditAccumulator
-    // for the memory bound and why the merge is order-insensitive).
-    val accumulator = new CreditAccumulator(Seq("v"), resolveMergeFanIn(spark))
-    runPairJobs(spark, concurrency, present.toSeq.map { case (i, j) => () =>
-      accumulator.add(pairCredits(eB, adjB, i, j).localCheckpoint(true))
-    })
-    val corners = accumulator.result().getOrElse {
-      import spark.implicits._
-      Seq.empty[(Long, Long)].toDF("v", "cnt")
-    }
-    GraphCore.vertices(canonical)
-      .join(corners, Seq("v"), "left")
-      .select(col("v"), coalesce(col("cnt"), lit(0L)).as("tri_cnt"))
-  }
-
-  /** One chunk-pair credit partial: (v, cnt) endpoint + witness credits of block
-    * pair (i, j)'s edges — longs only, never arrays. */
-  private[graft] def pairCredits(eB: DataFrame, adjB: DataFrame, i: Long, j: Long): DataFrame = {
-    val aU = broadcast(adjB.where(col("block") === i)
-      .select(col("v").as("src"), col("nbrs").as("nbrs_u")))
-    val aV = broadcast(adjB.where(col("block") === j)
-      .select(col("v").as("dst"), col("nbrs").as("nbrs_v")))
-    val withW = eB.where(col("bs") === i && col("bd") === j)
-      .join(aU, "src")
-      .join(aV, "dst")
-      .select(col("src"), col("dst"),
-        array_intersect(col("nbrs_u"), col("nbrs_v")).as("ws"))
-      .where(size(col("ws")) > 0)
-    withW
-      .select(col("src").as("v"), size(col("ws")).cast("long").as("c"))
-      .unionAll(withW.select(col("dst").as("v"), size(col("ws")).cast("long").as("c")))
-      .unionAll(withW.select(explode(col("ws")).as("v"), lit(1L).as("c")))
-      .groupBy("v").agg(sum("c").as("cnt"))
-  }
-
-  /** One chunk-pair partial: edges of block pair (i, j) probe the two broadcast
-    * adjacency blocks and reduce to a single count. Factored out so tests can
-    * assert the plan shape (broadcast hash joins only — no sort-merge join ever
-    * touches an array payload). */
-  private[graft] def shardPairCount(eB: DataFrame, adjB: DataFrame, i: Long, j: Long): DataFrame = {
-    val aU = broadcast(adjB.where(col("block") === i)
-      .select(col("v").as("src"), col("nbrs").as("nbrs_u")))
-    val aV = broadcast(adjB.where(col("block") === j)
-      .select(col("v").as("dst"), col("nbrs").as("nbrs_v")))
-    eB.where(col("bs") === i && col("bd") === j)
-      .join(aU, "src")
-      .join(aV, "dst")
-      .select(call_function(SortedIntersectCount.name, col("nbrs_u"), col("nbrs_v")).as("cnt"))
-      .agg(coalesce(sum(col("cnt")), lit(0L)).as("partial"))
-  }
-
-  /** Per-edge triangle support: |N⁺(u) ∩ N⁺(v)| for EVERY oriented edge (u, v),
-    * zero rows included — the k-truss building block (an edge belongs to the
-    * k-truss iff its support ≥ k−2) and the per-edge refinement of the global
-    * count (Σ support = triangles). Same broadcast-CSR probe + codegen
-    * two-pointer merge as [[globalAdjacency]], minus the final reduce; left
-    * joins because a dst with out-degree 0 has no adjacency row (support 0).
-    * Output (src, dst, support). */
-  def edgeSupport(
-      spark: SparkSession,
-      oriented: DataFrame,
-      adj: DataFrame,
-      broadcastAdj: Boolean = true,
-      maxBroadcastBytes: Long = AutoBroadcastBytes): DataFrame = {
-    SortedIntersectCount.register(spark)
-    if (broadcastAdj) {
-      // same auto-select contract as [[globalAdjacency]] (round-5 verdict #1:
-      // the per-edge family was the only kernel left that broadcast the full
-      // CSR unconditionally — the exact shape the 141M run proved aborts on
-      // maxResultSize at ~1.14 GB adjacency)
-      ensurePersisted(adj)
-      val budget = resolveMaxBroadcastBytes(spark, maxBroadcastBytes)
-      val bytes = adjacencyBytes(adj)
-      if (bytes > budget) {
-        val conc = resolvePairConcurrency(spark)
-        val shards = autoShards(bytes, resolveShardBudget(budget, conc))
-        System.err.println(s"[TriangleCount] adjacency ≈ $bytes B > broadcast budget $budget B" +
-          s" — auto-selecting the edge-support sharded kernel ($shards shards, $conc pair jobs)")
-        return edgeSupportSharded(spark, oriented, adj, shards, concurrency = conc)
-      }
-    }
-    def side(a: DataFrame) = if (broadcastAdj) broadcast(a) else a
-    val adjU = side(adj.select(col("v").as("src"), col("nbrs").as("nbrs_u")))
-    val adjV = side(adj.select(col("v").as("dst"), col("nbrs").as("nbrs_v")))
-    oriented
-      .join(adjU, Seq("src"), "left")
-      .join(adjV, Seq("dst"), "left")
-      .select(col("src"), col("dst"),
-        when(col("nbrs_u").isNull || col("nbrs_v").isNull, lit(0L))
-          .otherwise(
-            call_function(SortedIntersectCount.name, col("nbrs_u"), col("nbrs_v")))
-          .as("support"))
-  }
-
-  /** Out-of-core per-edge support — the sharded-broadcast twin of [[edgeSupport]],
-    * same 2D chunk-pair tiling as [[globalAdjacencySharded]] (gpu.cu:27-58's
-    * split kernel, per round-5 verdict #1). Every oriented edge lives in exactly
-    * ONE block pair, so the pair partials are DISJOINT (src, dst, support) sets:
-    * the merge is a plain union of per-pair `localCheckpoint`ed partials — no
-    * re-aggregation, unlike the overlapping credits of
-    * [[perVertexAdjacencySharded]]. Edges whose dst has no adjacency row drop
-    * from the block tagging and re-enter with support 0 through the final left
-    * join — the same rows the broadcast form's left joins produce. */
-  def edgeSupportSharded(
-      spark: SparkSession,
-      oriented: DataFrame,
-      adj: DataFrame,
-      shards: Int,
-      concurrency: Int = 1): DataFrame = {
-    require(shards >= 1, "shards must be positive")
-    require(concurrency >= 1, "concurrency must be positive")
-    SortedIntersectCount.register(spark)
-    val blocks = GraphCore.csrBlocks(adj, shards).select(col("v"), col("block"))
-    val adjB = CacheTracker.persist(adj.join(blocks, "v").select(col("v"), col("nbrs"), col("block")))
-    val eB = CacheTracker.persist(oriented
-      .join(blocks.select(col("v").as("src"), col("block").as("bs")), "src")
-      .join(blocks.select(col("v").as("dst"), col("block").as("bd")), "dst")
-      .select(col("src"), col("dst"), col("bs"), col("bd")))
-    val present = eB.groupBy("bs", "bd").agg(count(lit(1)))
-      .select(col("bs"), col("bd")).collect() // ≤ shards² coordinates — tiny
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(identity)
-    val partials = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    runPairJobs(spark, concurrency, present.toSeq.map { case (i, j) => () =>
-      partials.add(pairSupport(eB, adjB, i, j).localCheckpoint(true)): Unit
-    })
-    import scala.jdk.CollectionConverters._
-    val sup = partials.asScala.toSeq match {
-      case Nil =>
-        import spark.implicits._
-        Seq.empty[(Long, Long, Long)].toDF("src", "dst", "support")
-      case ps => ps.reduce(_ unionAll _)
-    }
-    oriented
-      .join(sup.withColumnRenamed("support", "s"), Seq("src", "dst"), "left")
-      .select(col("src"), col("dst"), coalesce(col("s"), lit(0L)).as("support"))
-  }
-
-  /** One chunk-pair support partial: (src, dst, support) for block pair (i, j)'s
-    * edges — zero-support rows kept (no filter), so the union of partials covers
-    * every tagged edge exactly once. */
-  private[graft] def pairSupport(eB: DataFrame, adjB: DataFrame, i: Long, j: Long): DataFrame = {
-    val aU = broadcast(adjB.where(col("block") === i)
-      .select(col("v").as("src"), col("nbrs").as("nbrs_u")))
-    val aV = broadcast(adjB.where(col("block") === j)
-      .select(col("v").as("dst"), col("nbrs").as("nbrs_v")))
-    eB.where(col("bs") === i && col("bd") === j)
-      .join(aU, "src")
-      .join(aV, "dst")
-      .select(col("src"), col("dst"),
-        call_function(SortedIntersectCount.name, col("nbrs_u"), col("nbrs_v")).as("support"))
-  }
-
-  /** Per-edge triangle MEMBERSHIP counts — each triangle {u,v,w} credits ALL
-    * THREE of its edges (Σ tri_cnt = 3·triangles), unlike [[edgeSupport]]'s
-    * base-edge counts (Σ = triangles). This is the k-truss peel criterion.
-    * Under the acyclic orientation u→v, u→w, v→w, the witness rows of base
-    * edge (u,v) credit (u,v), (u,w) and (v,w) — all of them oriented edges, so
-    * the credit aggregation stays on the oriented table. Zero rows included.
-    * Output (src, dst, tri_cnt). */
-  def edgeTriangleCounts(
-      spark: SparkSession,
-      oriented: DataFrame,
-      adj: DataFrame,
-      broadcastAdj: Boolean = true,
-      maxBroadcastBytes: Long = AutoBroadcastBytes): DataFrame = {
-    if (broadcastAdj) {
-      // same auto-select contract as [[globalAdjacency]]; [[ktrussEdges]]
-      // inherits the escape per peel round through this probe
-      ensurePersisted(adj)
-      val budget = resolveMaxBroadcastBytes(spark, maxBroadcastBytes)
-      val bytes = adjacencyBytes(adj)
-      if (bytes > budget) {
-        val conc = resolvePairConcurrency(spark)
-        val shards = autoShards(bytes, resolveShardBudget(budget, conc))
-        System.err.println(s"[TriangleCount] adjacency ≈ $bytes B > broadcast budget $budget B" +
-          s" — auto-selecting the edge-credit sharded kernel ($shards shards, $conc pair jobs)")
-        return edgeTriangleCountsSharded(spark, oriented, adj, shards, concurrency = conc)
-      }
-    }
-    def side(a: DataFrame) = if (broadcastAdj) broadcast(a) else a
-    val adjU = side(adj.select(col("v").as("src"), col("nbrs").as("nbrs_u")))
-    val adjV = side(adj.select(col("v").as("dst"), col("nbrs").as("nbrs_v")))
-    val withW = CacheTracker.persist(oriented
-      .join(adjU, "src")
-      .join(adjV, "dst")
-      .select(col("src"), col("dst"),
-        array_intersect(col("nbrs_u"), col("nbrs_v")).as("ws"))
-      .where(size(col("ws")) > 0))
-    val credits = withW
-      .select(col("src"), col("dst"), size(col("ws")).cast("long").as("c"))
-      .unionAll(withW.select(col("src"), explode(col("ws")).as("dst"), lit(1L).as("c")))
-      .unionAll(withW.select(col("dst").as("src"), explode(col("ws")).as("dst"), lit(1L).as("c")))
-      .groupBy("src", "dst").agg(sum("c").as("cnt"))
-    oriented
-      .join(credits, Seq("src", "dst"), "left")
-      .select(col("src"), col("dst"), coalesce(col("cnt"), lit(0L)).as("tri_cnt"))
-  }
-
-  /** Out-of-core per-edge membership counts — the sharded-broadcast twin of
-    * [[edgeTriangleCounts]]. Unlike [[edgeSupportSharded]]'s disjoint partials,
-    * a base edge (u,v) in pair (bs(u), bs(v)) credits edges (u,w) and (v,w)
-    * that may live in OTHER block pairs, so credits overlap across pairs: the
-    * merge is the same fan-in-batched [[CreditAccumulator]] as
-    * [[perVertexAdjacencySharded]] (credits are sums — associative-commutative,
-    * completion order cannot change the result), edge-keyed instead of
-    * vertex-keyed. Resident state per moment: concurrency × (2 adjacency
-    * blocks + 1 partial) + ≤ fanIn partials + one edge-sized count table. */
-  def edgeTriangleCountsSharded(
-      spark: SparkSession,
-      oriented: DataFrame,
-      adj: DataFrame,
-      shards: Int,
-      concurrency: Int = 1): DataFrame = {
-    require(shards >= 1, "shards must be positive")
-    require(concurrency >= 1, "concurrency must be positive")
-    val blocks = GraphCore.csrBlocks(adj, shards).select(col("v"), col("block"))
-    val adjB = CacheTracker.persist(adj.join(blocks, "v").select(col("v"), col("nbrs"), col("block")))
-    val eB = CacheTracker.persist(oriented
-      .join(blocks.select(col("v").as("src"), col("block").as("bs")), "src")
-      .join(blocks.select(col("v").as("dst"), col("block").as("bd")), "dst")
-      .select(col("src"), col("dst"), col("bs"), col("bd")))
-    val present = eB.groupBy("bs", "bd").agg(count(lit(1)))
-      .select(col("bs"), col("bd")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(identity)
-    val accumulator = new CreditAccumulator(Seq("src", "dst"), resolveMergeFanIn(spark))
-    runPairJobs(spark, concurrency, present.toSeq.map { case (i, j) => () =>
-      accumulator.add(pairEdgeCredits(eB, adjB, i, j).localCheckpoint(true))
-    })
-    val credits = accumulator.result().getOrElse {
-      import spark.implicits._
-      Seq.empty[(Long, Long, Long)].toDF("src", "dst", "cnt")
-    }
-    oriented
-      .join(credits, Seq("src", "dst"), "left")
-      .select(col("src"), col("dst"), coalesce(col("cnt"), lit(0L)).as("tri_cnt"))
-  }
-
-  /** One chunk-pair edge-credit partial: (src, dst, cnt) membership credits of
-    * block pair (i, j)'s base edges — each witness w of base edge (u,v) credits
-    * (u,v), (u,w) and (v,w), all oriented edges under the acyclic orientation. */
-  private[graft] def pairEdgeCredits(eB: DataFrame, adjB: DataFrame, i: Long, j: Long): DataFrame = {
-    val aU = broadcast(adjB.where(col("block") === i)
-      .select(col("v").as("src"), col("nbrs").as("nbrs_u")))
-    val aV = broadcast(adjB.where(col("block") === j)
-      .select(col("v").as("dst"), col("nbrs").as("nbrs_v")))
-    val withW = eB.where(col("bs") === i && col("bd") === j)
-      .join(aU, "src")
-      .join(aV, "dst")
-      .select(col("src"), col("dst"),
-        array_intersect(col("nbrs_u"), col("nbrs_v")).as("ws"))
-      .where(size(col("ws")) > 0)
-    withW
-      .select(col("src"), col("dst"), size(col("ws")).cast("long").as("c"))
-      .unionAll(withW.select(col("src"), explode(col("ws")).as("dst"), lit(1L).as("c")))
-      .unionAll(withW.select(col("dst").as("src"), explode(col("ws")).as("dst"), lit(1L).as("c")))
-      .groupBy("src", "dst").agg(sum("c").as("cnt"))
   }
 
   /** k-truss peel: iteratively remove every edge in fewer than k−2 triangles
@@ -804,8 +479,8 @@ object TriangleCount {
     var done = n == 0L
     while (!done && round < maxRounds) {
       // round-scoped cache release (round-6 verdict #5): each round's
-      // edgeTriangleCounts call persists its witness table and (via
-      // ensurePersisted) the fresh adjacency; once the round's survivor set is
+      // edgeTriangleCounts call persists (via ensurePersisted) the fresh
+      // adjacency, and sharded tiles their block tables; once the round's survivor set is
       // checkpointed and counted nothing references them again — release them
       // now instead of letting a deep peel accumulate toward CacheTracker's
       // eviction bound (and from there into silent recompute)

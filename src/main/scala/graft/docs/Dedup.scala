@@ -89,16 +89,12 @@ object Dedup {
     * "pairs sharing a shingle" row set at EVERY threshold, including 0. */
   def ngramJaccardPairs(docs: DataFrame, k: Int = 5, threshold: Double = 0.35): DataFrame = {
     graft.expr.SortedIntersectCount.register(docs.sparkSession)
-    // fan the text to the shuffle width ONLY when the scan is under-split (the
-    // single-small-file rescue, same gating as minhashLshPairs): the row-local
-    // kernel otherwise inherits the scan's parallelism — 1 task for a small
-    // single-file input, serializing the whole n² loop on one core
-    val nShuffle = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val fanned =
-      if (docs.rdd.getNumPartitions < nShuffle) docs.repartition(nShuffle) else docs
-    // persisted: both join sides read it — unpersisted, the text hashing runs
-    // twice (once in the broadcast build, once on the stream side)
-    val sets = graft.CacheTracker.persist(shingleSets(fanned, k)
+    // [[TextOps.fanned]]: fan the text out only when the scan is under-split —
+    // the row-local kernel otherwise inherits 1 task for a small single-file
+    // input, serializing the whole n² loop on one core. Persisted: both join
+    // sides read it — unpersisted, the text hashing runs twice (once in the
+    // broadcast build, once on the stream side)
+    val sets = graft.CacheTracker.persist(shingleSets(TextOps.fanned(docs), k)
       .select(col("doc_id"), col("xs"), size(col("xs")).cast("long").as("n")))
     val a = sets.select(col("doc_id").as("a"), col("xs").as("xa"), col("n").as("na"))
     val b = sets.select(col("doc_id").as("b"), col("xs").as("xb"), col("n").as("nb"))
@@ -280,7 +276,7 @@ object Dedup {
         if (b.isValidLong && b.toLong < (1L << 50)) f"${b.toLong / 1048576.0}%.1f MiB est" else "unknown"
       } catch { case _: Throwable => "unknown" }
     // fan the TEXT out to the session's shuffle width ONCE, before hashing — but
-    // ONLY when the scan is under-split (the single-small-file rescue case): the
+    // ONLY when the scan is under-split ([[TextOps.fanned]]): the
     // row-local kernels removed both prep exchanges, so parallelism would
     // otherwise equal the SCAN's split count — 1 for a small single-file input,
     // serializing the hashing, the banding, the self-join probe and the verify
@@ -289,10 +285,7 @@ object Dedup {
     // spark.sql.shuffle.partitions would both pay a corpus-sized text shuffle
     // AND collapse parallelism whenever the scan's split count exceeds that
     // setting (the normal case at the 100 TB design point) — round-6 advice.
-    val nShuffle = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val fanned =
-      if (docs.rdd.getNumPartitions < nShuffle) docs.repartition(nShuffle) else docs
-    val sets = graft.CacheTracker.persist(shingleSets(fanned, k), level)
+    val sets = graft.CacheTracker.persist(shingleSets(TextOps.fanned(docs), k), level)
     // persisted: BOTH sides of the candidate self-join read it — unpersisted,
     // the whole signature computation would run twice inside that job
     val banded = graft.CacheTracker.persist(signaturesFromSets(sets, perms)

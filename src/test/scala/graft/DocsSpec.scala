@@ -635,10 +635,8 @@ class BinaryIngestSpec extends AnyFunSuite {
       (0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 4L), (4L, 2L), (5L, 6L)))
     val oriented = GraphCore.orientClean(pairs)
     val adj = GraphCore.adjacency(oriented)
-    val b = TriangleCount.globalAdjacency(spark, oriented, adj, broadcastAdj = true)
-      .first().getLong(0)
-    val s = TriangleCount.globalAdjacency(spark, oriented, adj, broadcastAdj = false)
-      .first().getLong(0)
+    val b = TriangleCount.globalAdjacency(spark, oriented, adj).first().getLong(0)
+    val s = TriangleCount.globalRelational(oriented).first().getLong(0)
     assert(b === 2L && s === 2L)
   }
 

@@ -87,75 +87,106 @@ class TriangleCountSpec extends AnyFunSuite {
       .first().getLong(0)
   }
 
+  /** Run `body` with session confs set, then unset them and release caches. */
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally {
+      kv.foreach { case (k, _) => spark.conf.unset(k) }
+      CacheTracker.release(spark)
+    }
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString(",")).toSeq.sorted
+
+  private def kernels(canonical: org.apache.spark.sql.DataFrame,
+      oriented: org.apache.spark.sql.DataFrame): Seq[(String, TriangleCount.Kernel)] = Seq(
+    "global" -> TriangleCount.globalKernel,
+    "per-vertex" -> TriangleCount.vertexKernel(canonical),
+    "support" -> TriangleCount.supportKernel(oriented),
+    "membership" -> TriangleCount.membershipKernel(oriented))
+
+  private def random(seed: Int, n: Int, m: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+  }
+
+  private lazy val fixtureInputs = Seq("tri1" -> fixtures.tri1, "nvgraph8" -> fixtures.nvgraph8,
+    "dupEdges" -> fixtures.dupEdges, "selfLoop" -> fixtures.selfLoop)
+  private lazy val randomInputs = Seq("random7" -> random(7, 40, 200),
+    "random42" -> random(42, 60, 300), "random58" -> random(58, 30, 150))
+
+  /** The tiling differential: every kernel named in `only`, at every tile
+   *  `shardCounts` × `concs`, must equal its own 1×1 tile; the global 1×1
+   *  tile must also equal `globalRelational` and any golden count. Returns the
+   *  most wave partials one case produced (block pairs counted apart from the
+   *  driver), so a caller can assert that a mid-run merge flush ran. */
+  private def tilingDifferential(inputs: Seq[(String, Seq[(Long, Long)])], only: Set[String],
+      shardCounts: Seq[Int] = Seq(1, 2, 3, 7), concs: Seq[Int] = Seq(1, 3)): Int = {
+    var mostWaves = 0
+    for ((name, es) <- inputs) {
+      val canonical = GraphCore.clean(edgeDF(es)).localCheckpoint(true)
+      val oriented = GraphCore.orient(canonical, GraphCore.degrees(canonical)).localCheckpoint(true)
+      val adj = CacheTracker.persist(GraphCore.adjacency(oriented))
+      val ks = kernels(canonical, oriented).filter { case (k, _) => only(k) }
+      val oneByOne = ks.map { case (k, kernel) => k -> rows(TriangleCount.tiled(oriented, adj, kernel, None)) }.toMap
+      if (only("global")) {
+        val relational = TriangleCount.globalRelational(oriented).first().getLong(0)
+        assert(oneByOne("global") === Seq(relational.toString), s"$name: 1×1 global vs relational")
+        fixtures.goldenTriangles.get(name).foreach(g => assert(relational === g, s"$name: golden"))
+      }
+      val edges = oriented.collect().map(r => (r.getLong(0), r.getLong(1)))
+      for (shards <- shardCounts) {
+        val block = GraphCore.csrBlocks(adj, shards).select("v", "block")
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val pairs = edges.flatMap { case (u, v) => block.get(u).zip(block.get(v)) }.distinct.length
+        for (conc <- concs) {
+          mostWaves = math.max(mostWaves, (pairs + conc - 1) / conc)
+          for ((k, kernel) <- ks)
+            assert(rows(TriangleCount.tiled(oriented, adj, kernel, Some(TriangleCount.Tiles(shards, conc))))
+              === oneByOne(k), s"$name: $k @ $shards shards × $conc")
+        }
+      }
+      CacheTracker.release(spark)
+    }
+    mostWaves
+  }
+
+  private def assertFlushes(mostWaves: Int): Unit =
+    assert(mostWaves > TriangleCount.MergeFanIn,
+      s"no case flushes mid-run: $mostWaves wave partials ≤ fan-in ${TriangleCount.MergeFanIn}")
+
+  // The tiling differential (4 kernels × shards {1, 2, 3, 7} × concurrency
+  // {1, 3} over the four fixtures and three seeded random graphs) is split
+  // across the next six tests, one slice of the table each.
+
   test("sharded-broadcast (out-of-core) path equals broadcast path on all fixtures") {
-    for {
-      (name, es) <- Seq("tri1" -> fixtures.tri1, "nvgraph8" -> fixtures.nvgraph8,
-        "dupEdges" -> fixtures.dupEdges, "selfLoop" -> fixtures.selfLoop)
-      k <- Seq(1, 2, 3)
-    } assert(sharded(es, k) === fixtures.goldenTriangles(name), s"$name @ $k shards")
+    tilingDifferential(fixtureInputs, Set("global"))
   }
 
   test("sharded path equals broadcast path on seeded random graphs") {
-    for (seed <- Seq(7, 42); k <- Seq(3, 5)) {
-      val rnd = new scala.util.Random(seed)
-      val es = Seq.fill(500)((rnd.nextInt(70).toLong, rnd.nextInt(70).toLong))
-      assert(sharded(es, k) === adjacency(es), s"seed $seed @ $k shards")
-    }
+    assertFlushes(tilingDifferential(randomInputs, Set("global"), concs = Seq(1)))
   }
 
   test("concurrent pair-job pool yields the same count as the sequential loop") {
-    val rnd = new scala.util.Random(9)
-    val es = Seq.fill(500)((rnd.nextInt(70).toLong, rnd.nextInt(70).toLong))
-    val oriented = GraphCore.orientClean(edgeDF(es))
-    val adj = GraphCore.adjacency(oriented)
-    val seq = TriangleCount.globalAdjacencySharded(spark, oriented, adj, 4)
-      .first().getLong(0)
-    val conc = TriangleCount.globalAdjacencySharded(spark, oriented, adj, 4, concurrency = 3)
-      .first().getLong(0)
-    assert(conc === seq)
-    assert(seq === adjacency(es))
-    CacheTracker.release(spark)
+    // waves of 3 block pairs per Spark job against the 1×1 tile (the
+    // sequential concurrency-1 waves are the test above)
+    tilingDifferential(randomInputs, Set("global"), concs = Seq(3))
   }
 
   test("sharded per-vertex counts equal the broadcast per-vertex form") {
-    for ((name, es) <- Seq("nvgraph8" -> fixtures.nvgraph8, "selfLoop" -> fixtures.selfLoop)) {
-      val canonical = GraphCore.clean(edgeDF(es))
-      val oriented = GraphCore.orient(canonical, GraphCore.degrees(canonical))
-      val adj = GraphCore.adjacency(oriented)
-      val want = TriangleCount.perVertexAdjacency(canonical, oriented, adj)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      for (k <- Seq(1, 3)) {
-        val got = TriangleCount.perVertexAdjacencySharded(spark, canonical, oriented, adj, k)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(got === want, s"$name @ $k shards")
-      }
-    }
-    val rnd = new scala.util.Random(21)
-    val es = Seq.fill(500)((rnd.nextInt(70).toLong, rnd.nextInt(70).toLong))
-    val canonical = GraphCore.clean(edgeDF(es))
-    val oriented = GraphCore.orient(canonical, GraphCore.degrees(canonical))
-    val adj = GraphCore.adjacency(oriented)
-    val want = TriangleCount.perVertexAdjacency(canonical, oriented, adj)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val got = TriangleCount.perVertexAdjacencySharded(spark, canonical, oriented, adj, 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === want)
-    CacheTracker.release(spark)
+    assertFlushes(tilingDifferential(fixtureInputs ++ randomInputs, Set("per-vertex"), concs = Seq(1)))
   }
 
   test("pooled per-vertex sharded merge equals sequential and broadcast forms") {
-    val rnd = new scala.util.Random(33)
-    val es = Seq.fill(500)((rnd.nextInt(70).toLong, rnd.nextInt(70).toLong))
-    val canonical = GraphCore.clean(edgeDF(es))
-    val oriented = GraphCore.orient(canonical, GraphCore.degrees(canonical))
-    val adj = GraphCore.adjacency(oriented)
-    val want = TriangleCount.perVertexAdjacency(canonical, oriented, adj)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val pooled = TriangleCount.perVertexAdjacencySharded(
-        spark, canonical, oriented, adj, 4, concurrency = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(pooled === want, "associative credit merge must be order-independent")
-    CacheTracker.release(spark)
+    tilingDifferential(fixtureInputs ++ randomInputs, Set("per-vertex"), concs = Seq(3))
+  }
+
+  test("merge fan-in end-to-end: flush-forcing fanIn equals the broadcast forms") {
+    // edge-keyed credits (support and membership) at both wave widths; the
+    // 7-shard sequential cases yield more wave partials than the fan-in
+    assertFlushes(tilingDifferential(fixtureInputs ++ randomInputs, Set("support", "membership")))
   }
 
   test("CreditAccumulator: fanIn 1/2/16 all equal one flat union+groupBy; empty → None") {
@@ -180,59 +211,17 @@ class TriangleCountSpec extends AnyFunSuite {
     assert(new TriangleCount.CreditAccumulator(Seq("v"), 4).result().isEmpty)
   }
 
-  test("merge fan-in end-to-end: flush-forcing fanIn equals the broadcast forms") {
-    // one sharded run per kernel at fanIn 2 (3 shards → up to 9 pairs → mid-run
-    // flushes guaranteed); vertex-keyed AND edge-keyed credits
-    val rnd = new scala.util.Random(58)
-    val es = Seq.fill(300)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-    val canonical = GraphCore.clean(edgeDF(es))
-    val oriented = GraphCore.orient(canonical, GraphCore.degrees(canonical))
-    val adj = GraphCore.adjacency(oriented)
-    val wantV = TriangleCount.perVertexAdjacency(canonical, oriented, adj)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val wantE = TriangleCount.edgeTriangleCounts(spark, oriented, adj)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    spark.conf.set("spark.graft.shardMergeFanIn", "2")
-    try {
-      val gotV = TriangleCount.perVertexAdjacencySharded(
-          spark, canonical, oriented, adj, 3, concurrency = 2)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(gotV === wantV, "per-vertex @ fanIn 2")
-      val gotE = TriangleCount.edgeTriangleCountsSharded(
-          spark, oriented, adj, 3, concurrency = 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      assert(gotE === wantE, "edge credits @ fanIn 2")
-    } finally spark.conf.unset("spark.graft.shardMergeFanIn")
-    CacheTracker.release(spark)
-  }
-
-  test("runPairJobs: a failing pair job propagates its own exception and drops queued jobs") {
-    val executed = new java.util.concurrent.atomic.AtomicInteger(0)
-    val boom = new IllegalStateException("pair job failed")
-    val jobs: Seq[() => Unit] =
-      (() => { executed.incrementAndGet(); throw boom }) +:
-        Seq.fill(40)(() => { Thread.sleep(5); executed.incrementAndGet(): Unit })
-    val got = intercept[IllegalStateException] {
-      TriangleCount.runPairJobs(spark, 2, jobs)
-    }
-    assert(got eq boom, "the original cause, not an ExecutionException wrapper")
-    assert(executed.get() < 41, "queued jobs after the failure must be dropped")
-  }
-
-  test("broadcast budget: explicit > session conf > derived-with-cap") {
-    // explicit argument wins
-    assert(TriangleCount.resolveMaxBroadcastBytes(spark, 123L) === 123L)
+  test("broadcast budget: session conf > derived-with-cap") {
     // session conf (size string) overrides the derivation
-    spark.conf.set("spark.graft.maxBroadcastBytes", "512m")
-    try assert(TriangleCount.resolveMaxBroadcastBytes(spark, TriangleCount.AutoBroadcastBytes)
-      === 512L * 1024 * 1024)
-    finally spark.conf.unset("spark.graft.maxBroadcastBytes")
+    withConf("spark.graft.maxBroadcastBytes" -> "512m") {
+      assert(TriangleCount.resolveMaxBroadcastBytes(spark) === 512L * 1024 * 1024)
+    }
     // no conf, no executor sizing (local mode): the basis is the ACTUAL runtime
     // heap (× memory.fraction / 4), never above the 2 GiB cap (a fixed 2 GiB
     // floor inside an 8 GiB JVM is the round-5 OOM this derivation replaces)
     // and never above 3/4 of driver.maxResultSize (the broadcast build collects
     // the relation to the driver — round 5 measured the abort past that limit)
-    val derived = TriangleCount.resolveMaxBroadcastBytes(spark, TriangleCount.AutoBroadcastBytes)
+    val derived = TriangleCount.resolveMaxBroadcastBytes(spark)
     val sc = spark.sparkContext.getConf
     val frac = sc.getDouble("spark.memory.fraction", 0.6)
     val maxResult = sc.getSizeAsBytes("spark.driver.maxResultSize", "1g")
@@ -240,28 +229,24 @@ class TriangleCountSpec extends AnyFunSuite {
     assert(derived === math.min(math.min(TriangleCount.defaultMaxBroadcastBytes, resultCap),
       (Runtime.getRuntime.maxMemory * frac / 4).toLong))
     assert(derived > 0L)
-    // pool width: conf override > constant default
+    // wave width: conf override > constant default
     assert(TriangleCount.resolvePairConcurrency(spark) === TriangleCount.defaultPairConcurrency)
-    spark.conf.set("spark.graft.pairConcurrency", "7")
-    try assert(TriangleCount.resolvePairConcurrency(spark) === 7)
-    finally spark.conf.unset("spark.graft.pairConcurrency")
+    withConf("spark.graft.pairConcurrency" -> "7") {
+      assert(TriangleCount.resolvePairConcurrency(spark) === 7)
+    }
   }
 
   test("a configured small budget flips auto-select to the sharded path") {
     import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin}
     val oriented = GraphCore.orientClean(edgeDF(fixtures.nvgraph8))
     val adj = GraphCore.adjacency(oriented)
-    spark.conf.set("spark.graft.maxBroadcastBytes", "1")
-    try {
+    withConf("spark.graft.maxBroadcastBytes" -> "1") {
       val df = TriangleCount.globalAdjacency(spark, oriented, adj)
-      // the sharded form reduces on the driver: its result plan is a local
-      // relation with no joins — the broadcast form would be an agg over joins
+      // the sharded form's sum is a checkpointed accumulator: its result plan
+      // has no joins — the 1×1 tile would be an agg over the probe joins
       assert(df.queryExecution.optimizedPlan.collect { case j: LJoin => j }.isEmpty,
-        "tiny configured budget must route through globalAdjacencySharded")
+        "tiny configured budget must route through the sharded tiles")
       assert(df.first().getLong(0) === 3L)
-    } finally {
-      spark.conf.unset("spark.graft.maxBroadcastBytes")
-      CacheTracker.release(spark)
     }
   }
 
@@ -272,7 +257,7 @@ class TriangleCountSpec extends AnyFunSuite {
   }
 
   test("shard budget shrinks with pool width: concurrency×2 blocks stay within the derived heap share") {
-    // broadcast-mode budget assumes 2 resident copies; a pool holds conc×2
+    // broadcast-mode budget assumes 2 resident copies; a wave holds conc×2
     // blocks, so the per-pair block budget divides by conc/2 (round-5 OOM:
     // 3 shards × 4 pool jobs = 8 live blocks against a /4-derived budget)
     val b = 1L << 30
@@ -280,7 +265,7 @@ class TriangleCountSpec extends AnyFunSuite {
     assert(TriangleCount.resolveShardBudget(b, 2) === b)
     assert(TriangleCount.resolveShardBudget(b, 4) === b / 2)
     assert(TriangleCount.resolveShardBudget(b, 8) === b / 4)
-    // odd pool widths round UP (round-5 advice: floor let concurrency 3 keep
+    // odd wave widths round UP (round-5 advice: floor let concurrency 3 keep
     // the whole budget — ~3× the documented ≤2× resident invariant)
     assert(TriangleCount.resolveShardBudget(b, 3) === b / 2)
     assert(TriangleCount.resolveShardBudget(b, 7) === b / 4)
@@ -312,39 +297,22 @@ class TriangleCountSpec extends AnyFunSuite {
   }
 
   test("edge support: sharded twin equals the broadcast form; forced budget auto-selects it") {
-    def supMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val oriented = GraphCore.orientClean(edgeDF(fixtures.nvgraph8))
     val adj = GraphCore.adjacency(oriented)
-    val want = supMap(TriangleCount.edgeSupport(spark, oriented, adj))
-    assert(supMap(TriangleCount.edgeSupportSharded(spark, oriented, adj, 3, concurrency = 2)) === want)
-    // a 1-byte budget must route through the sharded form, rows unchanged
-    assert(supMap(TriangleCount.edgeSupport(spark, oriented, adj, maxBroadcastBytes = 1L)) === want)
-    // seeded random differential, pooled
-    val rnd = new scala.util.Random(53)
-    val o2 = GraphCore.orientClean(edgeDF(
-      Seq.fill(400)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))))
-    val adj2 = GraphCore.adjacency(o2)
-    assert(supMap(TriangleCount.edgeSupportSharded(spark, o2, adj2, 4, concurrency = 3))
-      === supMap(TriangleCount.edgeSupport(spark, o2, adj2)))
-    CacheTracker.release(spark)
+    val want = rows(TriangleCount.edgeSupport(spark, oriented, adj))
+    // a 1-byte budget must route through the sharded tiles, rows unchanged
+    withConf("spark.graft.maxBroadcastBytes" -> "1") {
+      assert(rows(TriangleCount.edgeSupport(spark, oriented, adj)) === want)
+    }
   }
 
   test("edge membership: sharded twin equals the broadcast form (cross-pair credits re-aggregate)") {
-    def cntMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val oriented = GraphCore.orientClean(edgeDF(fixtures.nvgraph8))
     val adj = GraphCore.adjacency(oriented)
-    val want = cntMap(TriangleCount.edgeTriangleCounts(spark, oriented, adj))
-    assert(cntMap(TriangleCount.edgeTriangleCountsSharded(spark, oriented, adj, 3, concurrency = 2)) === want)
-    assert(cntMap(TriangleCount.edgeTriangleCounts(spark, oriented, adj, maxBroadcastBytes = 1L)) === want)
-    val rnd = new scala.util.Random(59)
-    val o2 = GraphCore.orientClean(edgeDF(
-      Seq.fill(400)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))))
-    val adj2 = GraphCore.adjacency(o2)
-    assert(cntMap(TriangleCount.edgeTriangleCountsSharded(spark, o2, adj2, 4, concurrency = 3))
-      === cntMap(TriangleCount.edgeTriangleCounts(spark, o2, adj2)))
-    CacheTracker.release(spark)
+    val want = rows(TriangleCount.edgeTriangleCounts(spark, oriented, adj))
+    withConf("spark.graft.maxBroadcastBytes" -> "1") {
+      assert(rows(TriangleCount.edgeTriangleCounts(spark, oriented, adj)) === want)
+    }
   }
 
   test("k-truss inherits the out-of-core escape: forced tiny budget, same surviving edges") {
@@ -452,36 +420,46 @@ class TriangleCountSpec extends AnyFunSuite {
     val oriented = GraphCore.orientClean(edgeDF(fixtures.nvgraph8))
     val adj = GraphCore.adjacency(oriented)
     // threshold of 1 byte forces the out-of-core path; result must be unchanged
-    val got = TriangleCount.globalAdjacency(spark, oriented, adj,
-      maxBroadcastBytes = 1L).first().getLong(0)
-    assert(got === 3L)
+    withConf("spark.graft.maxBroadcastBytes" -> "1") {
+      assert(TriangleCount.globalAdjacency(spark, oriented, adj).first().getLong(0) === 3L)
+    }
   }
 
   test("perVertexAdjacency auto-selects the sharded path above the broadcast threshold") {
     val canonical = GraphCore.clean(edgeDF(fixtures.nvgraph8))
     val oriented = GraphCore.orient(canonical, GraphCore.degrees(canonical))
     val adj = GraphCore.adjacency(oriented)
-    val got = TriangleCount.perVertexAdjacency(canonical, oriented, adj,
-        maxBroadcastBytes = 1L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 2L, 5L -> 1L))
-    CacheTracker.release(spark)
+    withConf("spark.graft.maxBroadcastBytes" -> "1") {
+      val got = TriangleCount.perVertexAdjacency(canonical, oriented, adj)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 2L, 5L -> 1L))
+    }
   }
 
   test("sharded pair jobs use broadcast hash joins — no sort-merge join of array payloads") {
-    val oriented = GraphCore.orientClean(edgeDF(fixtures.nvgraph8))
-    val adj = GraphCore.adjacency(oriented)
-    val blocks = GraphCore.csrBlocks(adj, 2).select(col("v"), col("block"))
-    val adjB = adj.join(blocks, "v").select(col("v"), col("nbrs"), col("block"))
-    val eB = oriented
-      .join(blocks.select(col("v").as("src"), col("block").as("bs")), "src")
-      .join(blocks.select(col("v").as("dst"), col("block").as("bd")), "dst")
-      .select(col("src"), col("dst"), col("bs"), col("bd"))
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object aqe extends AdaptiveSparkPlanHelper
+    val canonical = GraphCore.clean(edgeDF(fixtures.nvgraph8))
+    val oriented = GraphCore.orient(canonical, GraphCore.degrees(canonical))
+    val adj = CacheTracker.persist(GraphCore.adjacency(oriented))
     graft.expr.SortedIntersectCount.register(spark)
-    val plan = TriangleCount.shardPairCount(eB, adjB, 0L, 0L)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"expected broadcast joins:\n$plan")
-    assert(!plan.contains("SortMergeJoin"), s"array payload must never sort-merge:\n$plan")
+    // the shared probe as the 1×1 tile and as a wave of a 2-shard tiling,
+    // under every kernel's credit function and keyed sum
+    val probes = Seq(
+      "1×1" -> TriangleCount.probe(oriented, adj, adj),
+      "2-shard" -> TriangleCount.waves(oriented, adj, TriangleCount.Tiles(2, 1)).next())
+    for ((tile, probed) <- probes; (k, kernel) <- kernels(canonical, oriented)) {
+      val plan = kernel.credit(probed).groupBy(kernel.keys.map(col): _*).agg(sum("cnt"))
+        .queryExecution.executedPlan
+      val text = plan.toString
+      assert(text.contains("BroadcastHashJoin"), s"$tile/$k: expected broadcast joins:\n$text")
+      assert(!text.contains("SortMergeJoin"), s"$tile/$k: array payload must never sort-merge:\n$text")
+      val arrayShuffles = aqe.collect(plan) {
+        case e: ShuffleExchangeExec if e.output.exists(_.name.startsWith("nbrs")) => e
+      }
+      assert(arrayShuffles.isEmpty, s"$tile/$k: an exchange carries neighbor arrays:\n$text")
+    }
     CacheTracker.release(spark)
   }
 }
