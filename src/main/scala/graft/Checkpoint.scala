@@ -28,29 +28,34 @@ object Checkpoint {
 
   private val manifestRe: Regex = """manifest_(\d+)\.json""".r
 
-  /** Snapshot `state` as iteration `iter` and certify it with a manifest. Returns the
-    * reloaded (lineage-truncated) DataFrame, which callers should use in place of the
-    * in-memory one. */
+  /** Snapshot `state` as iteration `iter` and certify it with a manifest. The
+    * per-partition row counts are taken from the snapshot as written, read back. */
   def save(state: DataFrame, dir: String, iter: Int,
-           metrics: Map[String, Double] = Map.empty): DataFrame = {
+           metrics: Map[String, Double] = Map.empty): Unit = {
     val spark = state.sparkSession
     val snap = s"$dir/iter_$iter"
     state.write.mode("overwrite").parquet(snap)
-    val back = spark.read.parquet(snap)
-    val parts = back.groupBy(spark_partition_id().as("pid")).count()
+    val counts = spark.read.parquet(snap).groupBy(spark_partition_id().as("pid")).count()
       .orderBy("pid").collect()
-      .map(r => s"""{"pid":${r.getInt(0)},"rows":${r.getLong(1)}}""")
-    val rows = parts.map(_.split("\"rows\":")(1).dropRight(1).toLong).sum
+      .map(r => (r.getInt(0), r.getLong(1)))
+    val parts = counts.map { case (pid, rows) => s"""{"pid":$pid,"rows":$rows}""" }
     val m = metrics.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val json =
-      s"""{"iter":$iter,"path":"$snap","rows":$rows,"partitions":[${parts.mkString(",")}],"metrics":$m,"complete":true}"""
+      s"""{"iter":$iter,"path":"$snap","rows":${counts.map(_._2).sum},"partitions":[${parts.mkString(",")}],"metrics":$m,"complete":true}"""
     Files.createDirectories(Paths.get(dir))
     val tmp = Paths.get(s"$dir/.manifest_$iter.json.tmp")
     Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, Paths.get(s"$dir/manifest_$iter.json"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    back
   }
+
+  /** The save rule every iterative kernel shares: with a `dir`, snapshot
+    * iteration `iter` every `every` iterations and on the iteration that ends
+    * the run (`last`), whatever ended it — so a run's final state is always
+    * certified, converged or not. */
+  private[graft] def saveIfDue(dir: Option[String], every: Int, iter: Int, last: Boolean)(
+      state: DataFrame, metrics: Map[String, Double] = Map.empty): Unit =
+    dir.foreach { d => if ((iter + 1) % every == 0 || last) save(state, d, iter, metrics) }
 
   /** Highest certified iteration under `dir`, if any. */
   def latestIter(dir: String): Option[Int] = {

@@ -40,19 +40,37 @@ object Components {
   def run(canonical: DataFrame, maxRounds: Int = 50, largeStarForm: String = "window"): DataFrame = {
     require(largeStarForm == "window" || largeStarForm == "agg",
       s"unknown largeStarForm '$largeStarForm' (window | agg)")
+    stars(canonical, Nil, maxRounds, largeStarForm)
+  }
+
+  /** Per-key (e.g. per-day) component labels over a keyed canonical edge table
+    * (key, src, dst): the same alternating star rounds with the key prefixed to
+    * every window partition, group key, and distinct — each key's subgraph
+    * converges independently inside the ONE shared loop (rounds needed = max
+    * over keys, still O(log² n)), shuffles co-partition on (key, vertex), and
+    * keys never interact. Output (key, v, component), component = min vertex id
+    * within the key's subgraph. */
+  def runKeyed(keyed: DataFrame, maxRounds: Int = 50, key: String = "day"): DataFrame =
+    stars(keyed, Seq(key), maxRounds, "window")
+
+  /** The star loop: alternating large-star/small-star rounds over the edges of
+    * each `keys` group (empty: one graph) until the edge set is a fixpoint.
+    * The `"agg"` large-star form exists only for the unkeyed graph.
+    * Output (keys…, v, component). */
+  private def stars(input: DataFrame, keys: Seq[String], maxRounds: Int, largeStarForm: String): DataFrame = {
+    val kc = keys.map(col)
     // Internal representation: every edge directed (src, dst) with src > dst.
-    var edges = canonical
-      .select(greatest(col("src"), col("dst")).as("src"),
-        least(col("src"), col("dst")).as("dst"))
+    var edges = input
+      .select(kc :+ greatest(col("src"), col("dst")).as("src") :+ least(col("src"), col("dst")).as("dst"): _*)
       .distinct()
       .localCheckpoint(false)
     // the CHECKPOINTED initial edge set also serves the final vertex-set
-    // derivation (round-7): referencing `canonical` again there re-executed the
+    // derivation (round-7): referencing `input` again there re-executed the
     // caller's whole upstream pipeline twice more — for the dedup/embed cluster
     // queries that upstream is the entire near-dup-pairs computation. Same
-    // vertex set: e0 is `canonical` with per-edge orientation flipped.
+    // vertex set: e0 is `input` with per-edge orientation flipped.
     val e0 = edges
-    var prev = checksum(edges) // first action → materializes the lazy checkpoint
+    var prev = checksum(edges, keys) // first action → materializes the lazy checkpoint
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
@@ -65,51 +83,20 @@ object Components {
           Some(edges.unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         else None
-      val ls = roundSym.map(largeStarAggOn).getOrElse(largeStar(edges))
-      edges = smallStar(ls).localCheckpoint(false)
-      val cur = checksum(edges) // materializes the round; roundSym no longer needed
+      val ls = roundSym.map(largeStarAggOn).getOrElse(largeStar(edges, keys))
+      edges = smallStar(ls, keys).localCheckpoint(false)
+      val cur = checksum(edges, keys) // materializes the round; roundSym no longer needed
       roundSym.foreach(_.unpersist(false))
       converged = cur == prev
       prev = cur
       round += 1
     }
-    val parents = edges.groupBy(col("src").as("v")).agg(min(col("dst")).as("p"))
-    GraphCore.vertices(e0)
-      .join(parents, Seq("v"), "left")
-      .select(col("v"), coalesce(col("p"), col("v")).as("component"))
-  }
-
-  /** Per-key (e.g. per-day) component labels over a keyed canonical edge table
-    * (key, src, dst): the same alternating star rounds with the key prefixed to
-    * every window partition, group key, and distinct — each key's subgraph
-    * converges independently inside the ONE shared loop (rounds needed = max
-    * over keys, still O(log² n)), shuffles co-partition on (key, vertex), and
-    * keys never interact. Output (key, v, component), component = min vertex id
-    * within the key's subgraph. */
-  def runKeyed(keyed: DataFrame, maxRounds: Int = 50, key: String = "day"): DataFrame = {
-    val k = col(key)
-    var edges = keyed
-      .select(k, greatest(col("src"), col("dst")).as("src"),
-        least(col("src"), col("dst")).as("dst"))
+    val parents = edges.groupBy(kc :+ col("src").as("v"): _*).agg(min(col("dst")).as("p"))
+    e0.select(kc :+ col("src").as("v"): _*)
+      .unionAll(e0.select(kc :+ col("dst").as("v"): _*))
       .distinct()
-      .localCheckpoint(false)
-    val e0 = edges // serves the final vertex derivation too — see [[run]]
-    var prev = checksum(edges, Seq(key))
-    var round = 0
-    var converged = false
-    while (round < maxRounds && !converged) {
-      edges = smallStar(largeStar(edges, Seq(key)), Seq(key)).localCheckpoint(false)
-      val cur = checksum(edges, Seq(key))
-      converged = cur == prev
-      prev = cur
-      round += 1
-    }
-    val parents = edges.groupBy(k, col("src").as("v")).agg(min(col("dst")).as("p"))
-    e0.select(k, col("src").as("v"))
-      .unionAll(e0.select(k, col("dst").as("v")))
-      .distinct()
-      .join(parents, Seq(key, "v"), "left")
-      .select(k, col("v"), coalesce(col("p"), col("v")).as("component"))
+      .join(parents, keys :+ "v", "left")
+      .select(kc :+ col("v") :+ coalesce(col("p"), col("v")).as("component"): _*)
   }
 
   /** Large-star round: every node connects its strictly-larger neighbors to the

@@ -106,11 +106,16 @@ object GraphCore {
       .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
       .select(col("v"), size(col("nbrs")).cast("long").as("deg"), col("nbrs"))
 
-  /** Symmetrized (both-direction) view of a canonical edge set, for kernels that
-    * need full neighborhoods (PageRank / CC / LPA). Schema (src, dst). */
-  def symmetric(canonical: DataFrame): DataFrame =
-    canonical.unionAll(
-      canonical.select(col("dst").as("src"), col("src").as("dst")))
+  /** Symmetrized (both-direction) view of an edge set, for kernels that need
+    * full neighborhoods (PageRank / CC / LPA): each row appears as given and
+    * with `src` and `dst` swapped; any other column (a key, a weight) rides
+    * along unchanged. Schema: the input's. */
+  def symmetric(edges: DataFrame): DataFrame =
+    edges.unionAll(edges.select(edges.columns.toSeq.map {
+      case "src" => col("dst").as("src")
+      case "dst" => col("src").as("dst")
+      case c => col(c)
+    }: _*))
 
   /** CSR offsets + edge-count-balanced block assignment — the Spark analog of the
     * reference's `get_split_v2` (TrCountingGraph.cpp:365-380: lower_bound over the

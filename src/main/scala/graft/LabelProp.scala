@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Synchronous label propagation (Raghavan et al. 2007) with a fully deterministic
@@ -24,39 +24,8 @@ object LabelProp {
       canonical: DataFrame,
       iters: Int,
       checkpointDir: Option[String] = None,
-      checkpointEvery: Int = 5): DataFrame = {
-    val spark = canonical.sparkSession
-    // LAZY checkpoints throughout (round-7): every eager localCheckpoint here
-    // was its own blocking job (sym, init, one per step — 4+ job round-trips
-    // per query); nothing reads an intermediate between steps, so the single
-    // final action materializes the whole chain in one job while each
-    // checkpoint still caches and truncates lineage exactly as before.
-    val sym = GraphCore.symmetric(canonical)
-      .repartition(col("src"))
-      .localCheckpoint(false)
-    val (startIter, init) = checkpointDir.flatMap(Checkpoint.resume(spark, _)) match {
-      case Some((i, snap)) => (i + 1, snap)
-      case None =>
-        // vertex set from the CHECKPOINTED sym (every vertex appears as src in
-        // the symmetrized table — identical set): the distinct inherits sym's
-        // hash(src) partitioning, so it plans with NO exchange, vs the
-        // union + full-shuffle distinct of vertices(canonical) (round 7;
-        // runWeighted already did it this way)
-        (0, sym.select(col("src").as("v")).distinct()
-          .select(col("v"), col("v").as("label")))
-    }
-    var labels = init.localCheckpoint(false)
-    var iter = startIter
-    while (iter < iters) {
-      labels = step(sym, labels).localCheckpoint(false)
-      checkpointDir.foreach { dir =>
-        if ((iter + 1) % checkpointEvery == 0 || iter + 1 == iters)
-          Checkpoint.save(labels, dir, iter)
-      }
-      iter += 1
-    }
-    labels
-  }
+      checkpointEvery: Int = 5): DataFrame =
+    propagate(GraphCore.symmetric(canonical), lit(1L), iters, checkpointDir, checkpointEvery)
 
   /** Weighted synchronous LPA over a canonical weighted edge table
     * (src, dst, w): neighbor votes count w(u,v) instead of 1, so strongly
@@ -64,27 +33,46 @@ object LabelProp {
     * [[PageRank.weightedFixedIterations]] on the
     * [[Ingest.weightedEdgesFromEvents]] multiplicity edges. Same deterministic
     * (weight desc, label asc) tie-break and the same map-side-combinable
-    * `max_by` argmax (no window) as the unweighted [[step]]. */
-  def runWeighted(weighted: DataFrame, iters: Int): DataFrame = {
-    val sym = weighted.select(col("src"), col("dst"), col("w"))
-      .unionAll(weighted.select(col("dst").as("src"), col("src").as("dst"), col("w")))
+    * `max_by` argmax (no window) as the unweighted run. */
+  def runWeighted(weighted: DataFrame, iters: Int): DataFrame =
+    propagate(GraphCore.symmetric(weighted.select(col("src"), col("dst"), col("w"))), col("w"), iters)
+
+  /** The LPA loop over `edges`, the edges in both directions
+    * ([[GraphCore.symmetric]]): `iters` synchronous [[step]]s whose votes weigh
+    * `w` (evaluated on the edge rows; `lit(1L)`: unweighted). */
+  private def propagate(
+      edges: DataFrame,
+      w: Column,
+      iters: Int,
+      checkpointDir: Option[String] = None,
+      checkpointEvery: Int = 5): DataFrame = {
+    // LAZY checkpoints throughout (round-7): every eager localCheckpoint here
+    // was its own blocking job (sym, init, one per step — 4+ job round-trips
+    // per query); nothing reads an intermediate between steps, so the single
+    // final action materializes the whole chain in one job while each
+    // checkpoint still caches and truncates lineage exactly as before.
+    val sym = edges
       .repartition(col("src"))
       .localCheckpoint(false)
-    var labels = sym.select(col("src").as("v")).distinct()
-      .select(col("v"), col("v").as("label"))
-      .localCheckpoint(false)
-    for (_ <- 1 to iters)
-      labels = stepWeighted(sym, labels).localCheckpoint(false)
+    val (startIter, init) = checkpointDir.flatMap(Checkpoint.resume(edges.sparkSession, _)) match {
+      case Some((i, snap)) => (i + 1, snap)
+      case None =>
+        // vertex set from the CHECKPOINTED sym (every vertex appears as src in
+        // the symmetrized table — identical set): the distinct inherits sym's
+        // hash(src) partitioning, so it plans with NO exchange, vs the
+        // union + full-shuffle distinct of vertices(canonical)
+        (0, sym.select(col("src").as("v")).distinct()
+          .select(col("v"), col("v").as("label")))
+    }
+    var labels = init.localCheckpoint(false)
+    var iter = startIter
+    while (iter < iters) {
+      labels = step(sym, labels, w).localCheckpoint(false)
+      Checkpoint.saveIfDue(checkpointDir, checkpointEvery, iter, iter + 1 == iters)(labels)
+      iter += 1
+    }
     labels
   }
-
-  private[graft] def stepWeighted(sym: DataFrame, labels: DataFrame): DataFrame =
-    sym
-      .join(labels.select(col("v").as("src"), col("label").as("nlbl")), "src")
-      .groupBy(col("dst").as("v"), col("nlbl"))
-      .agg(sum(col("w")).as("n"))
-      .groupBy("v")
-      .agg(max_by(col("nlbl"), struct(col("n"), -col("nlbl"))).as("label"))
 
   /** Newman modularity contributions of a vertex partition over the canonical
     * undirected edge table: per community c,
@@ -122,15 +110,17 @@ object LabelProp {
           - pow(col("deg_sum") / (lit(2.0) * col("m")), 2), 6) + lit(0.0)).as("q_contrib"))
   }
 
-  /** One synchronous step: (v, label) → (v, label). Every vertex of `sym` has ≥1
-    * neighbor, so the output covers the same vertex set. */
-  private[graft] def step(sym: DataFrame, labels: DataFrame): DataFrame = {
-    // argmax by (count desc, label asc): maximize (n, -nlbl). Labels are vertex
+  /** One synchronous step: (v, label) → (v, label), each neighbor voting with
+    * weight `w` — with `w = 1L` the vote sum equals the neighbor count, as the
+    * same `long`. Every vertex of `sym` has ≥1 neighbor, so the output covers
+    * the same vertex set. */
+  private[graft] def step(sym: DataFrame, labels: DataFrame, w: Column = lit(1L)): DataFrame = {
+    // argmax by (vote desc, label asc): maximize (n, -nlbl). Labels are vertex
     // ids ≥ 0 in every ingest path, so -nlbl cannot overflow.
     sym
       .join(labels.select(col("v").as("src"), col("label").as("nlbl")), "src")
       .groupBy(col("dst").as("v"), col("nlbl"))
-      .agg(count(lit(1)).as("n"))
+      .agg(sum(w).as("n"))
       .groupBy("v")
       .agg(max_by(col("nlbl"), struct(col("n"), -col("nlbl"))).as("label"))
   }

@@ -12,12 +12,16 @@ import org.apache.spark.storage.StorageLevel
   * (Page et al. 1999): pr⁰ = 1/n, prᵏ⁺¹(v) = (1−d)/n + d·Σ_{u→v} prᵏ(u)/outdeg(u),
   * damping d = 0.85, convergence when max |prᵏ⁺¹ − prᵏ| < tol (1e-6 per north_rule).
   *
+  * Every entry point runs the one loop, [[iterate]], parameterised by key
+  * columns (per-key subgraphs), an edge weight and a teleport predicate.
+  *
   * Scale shape: the edge table is joined with out-degrees ONCE, hash-partitioned by
-  * `src`, and persisted — each iteration then shuffles only the rank table
-  * (one row per vertex) into that fixed partitioning, aggregates map-side, and takes
-  * a single `max(abs(delta))` action. Lineage is truncated every iteration with
-  * `localCheckpoint`; durable resumable snapshots go through [[Checkpoint]] every
-  * `checkpointEvery` iterations when `checkpointDir` is set.
+  * (keys, `src`), and persisted — each iteration then shuffles only the rank table
+  * (one row per vertex) into that fixed partitioning and aggregates map-side.
+  * Tolerance mode takes one `max(abs(delta))` action and truncates lineage with a
+  * lazy `localCheckpoint` every iteration; fixed-iteration mode takes no action and
+  * truncates every [[lineageEvery]] iterations. Durable resumable snapshots go
+  * through [[Checkpoint]] when `checkpointDir` is set.
   */
 object PageRank {
 
@@ -29,60 +33,27 @@ object PageRank {
       damping: Double = 0.85,
       checkpointDir: Option[String] = None,
       checkpointEvery: Int = 5): DataFrame =
-    iterate(canonical, maxIter, Some(tol), damping, checkpointDir, checkpointEvery)
+    iterate(GraphCore.symmetric(canonical), Nil, lit(1L), _ => lit(true), maxIter, Some(tol), damping,
+      checkpointDir, checkpointEvery)
 
   /** Run exactly `iters` iterations (no convergence action) — the oracle-checkable
     * variant. Output (v, pr). */
   def fixedIterations(canonical: DataFrame, iters: Int, damping: Double = 0.85): DataFrame =
-    iterate(canonical, iters, None, damping, None, Int.MaxValue)
+    iterate(GraphCore.symmetric(canonical), Nil, lit(1L), _ => lit(true), iters, None, damping)
 
   /** Weighted PageRank at exactly `iters` iterations over a canonical weighted
     * edge table (src, dst, w): contributions proportional to edge weight,
     * prᵏ⁺¹(v) = (1−d)/n + d·Σ_{u→v} prᵏ(u)·w(u,v)/wdeg(u) with wdeg the
-    * weighted degree. Same scale discipline as the unweighted [[iterate]]:
-    * links joined with weighted degrees ONCE and hash-partitioned by `src`,
-    * only the vertex-sized rank table moves per iteration, lazy per-iteration
-    * lineage truncation. The (pr·w)/wdeg association mirrors the oracle's
+    * weighted degree. The (pr·w)/wdeg association mirrors the oracle's
     * left-to-right SQL evaluation so rounded ranks can never drift.
-    * Output (v, pr). */
-  def weightedFixedIterations(weighted: DataFrame, iters: Int, damping: Double = 0.85): DataFrame = {
-    // persisted (round-7): sym feeds three branches (wdeg, the links join, and
-    // the vertex set) and `weighted` is typically an UNCACHED derivation
-    // (scan + window + aggregate) — unpersisted, that whole upstream executed
-    // three times before the first iteration even started
-    val sym = CacheTracker.persist(
-      weighted.select(col("src"), col("dst"), col("w"))
-        .unionAll(weighted.select(col("dst").as("src"), col("src").as("dst"), col("w"))),
-      StorageLevel.MEMORY_AND_DISK)
-    val wdeg = sym.groupBy("src").agg(sum(col("w")).as("wdeg"))
-    val links = sym.join(wdeg, "src")
-      .select(col("src"), col("dst"), col("w"), col("wdeg"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // vertex set from the PERSISTED links table (the inner wdeg join preserves
-    // every sym row, and every vertex appears as src in sym — identical set):
-    // the distinct inherits links' hash(src) partitioning and plans with NO
-    // exchange, vs an edge-scale shuffle of the unpartitioned sym rows
-    // (round 7 — the LabelProp.run label-init derivation, applied here)
-    val verts = links.select(col("src").as("v")).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    val n = verts.count()
-    val base = (1.0 - damping) / n
-    var ranks = verts.select(col("v"), lit(1.0 / n).as("pr")).localCheckpoint(false)
-    for (i <- 1 to iters) {
-      val contrib = links
-        .join(ranks.withColumnRenamed("v", "src"), "src")
-        .select(col("dst").as("v"), (col("pr") * col("w") / col("wdeg")).as("c"))
-        .groupBy("v")
-        .agg((lit(base) + lit(damping) * sum("c")).as("pr"))
-      ranks = if (i % lineageEvery == 0 || i == iters) contrib.localCheckpoint(false) else contrib
-    }
-    links.unpersist()
-    verts.unpersist()
-    // sym stays tracker-persisted until the harness releases the query: an
-    // eager unpersist here would drop the cache BEFORE the caller's action
-    // materializes the (lazy) rank chain that still reads it
-    ranks
-  }
+    *
+    * The symmetrized edges are tracker-persisted: `weighted` is typically an
+    * UNCACHED derivation (scan + window + aggregate) that the degree and links
+    * branches would otherwise each execute; they stay cached until the harness
+    * releases the query, because the returned rank chain is lazy. Output (v, pr). */
+  def weightedFixedIterations(weighted: DataFrame, iters: Int, damping: Double = 0.85): DataFrame =
+    iterate(CacheTracker.persist(GraphCore.symmetric(weighted.select(col("src"), col("dst"), col("w"))),
+      StorageLevel.MEMORY_AND_DISK), Nil, col("w"), _ => lit(true), iters, None, damping)
 
   /** Per-key (e.g. per-day) PageRank at exactly `iters` iterations over a
     * keyed canonical edge table (key, src, dst): each key's subgraph ranks
@@ -90,49 +61,14 @@ object PageRank {
     * day). The key rides in every join and group key, so the shuffle
     * co-partitions on (key, vertex) and distinct keys proceed in parallel
     * with zero cross-talk, exactly like [[TriangleCount.globalPerKey]].
-    *
-    * Scale discipline matches [[iterate]]: links joined with per-key degrees
-    * ONCE and partitioned by (key, src); per iteration only the rank table
-    * moves. The per-key vertex count rides WITH the rank rows (constant per
-    * key, re-emitted by `max` in the aggregate) — no per-iteration join
-    * against a counts table. Output (key, v, pr). */
+    * Output (key, v, pr). */
   def fixedIterationsKeyed(
       keyed: DataFrame,
       iters: Int,
       damping: Double = 0.85,
-      key: String = "day"): DataFrame = {
-    val k = col(key)
-    val sym = keyed.select(k, col("src"), col("dst"))
-      .unionAll(keyed.select(k, col("dst").as("src"), col("src").as("dst")))
-    val deg = sym.groupBy(k, col("src")).agg(count(lit(1)).as("deg"))
-    val links = sym.join(deg, Seq(key, "src"))
-      .repartition(k, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // vertex set from the PERSISTED links table (inner deg join preserves
-    // every sym row; every vertex appears as src — identical set): the
-    // distinct reuses links' hash(key, src) partitioning with NO exchange,
-    // and the two references below (the n counts and the init join) read the
-    // cache instead of re-executing the lazy sym union twice (round 7)
-    val verts = links.select(k, col("src").as("v")).distinct()
-    val n = verts.groupBy(k).agg(count(lit(1)).as("n"))
-    var ranks = verts.join(n, key)
-      .select(k, col("v"), (lit(1.0) / col("n")).as("pr"), col("n"))
-      .localCheckpoint(false)
-    for (i <- 1 to iters) {
-      val contrib = links
-        .join(ranks.withColumnRenamed("v", "src"), Seq(key, "src"))
-        .select(k, col("dst").as("v"), (col("pr") / col("deg")).as("c"), col("n"))
-        .groupBy(k, col("v"))
-        .agg(((lit(1.0 - damping) / max(col("n"))) + lit(damping) * sum(col("c"))).as("pr"),
-          max(col("n")).as("n"))
-      // fixed-iteration mode: nothing reads intermediate ranks — truncate
-      // lineage every [[lineageEvery]] iterations (the round-7 [[iterate]]
-      // discipline), not per iteration
-      ranks = if (i % lineageEvery == 0 || i == iters) contrib.localCheckpoint(false) else contrib
-    }
-    links.unpersist()
-    ranks.select(k, col("v"), col("pr"))
-  }
+      key: String = "day"): DataFrame =
+    iterate(GraphCore.symmetric(keyed.select(col(key), col("src"), col("dst"))), Seq(key), lit(1L),
+      _ => lit(true), iters, None, damping)
 
   /** Personalized PageRank at exactly `iters` iterations: random walk with
     * restart into a source SET — teleport mass goes only to vertices matching
@@ -145,117 +81,104 @@ object PageRank {
     * "only the rank table moves" discipline as the global kernel (a source
     * TABLE would re-introduce the per-iteration vertex join the round-3 work
     * removed). For an extensional source list, ship it as a broadcast IN-list
-    * or a Bloom predicate. Output (v, pr); Σ pr ≤ 1 with the deficit being
-    * walk mass absorbed at restart — the standard PPR normalization. */
+    * or a Bloom predicate. A predicate no vertex matches fails the query.
+    * Output (v, pr); Σ pr ≤ 1 with the deficit being walk mass absorbed at
+    * restart — the standard PPR normalization. */
   def personalizedFixedIterations(
       canonical: DataFrame,
       isSource: Column => Column,
       iters: Int,
-      damping: Double = 0.85): DataFrame = {
-    val sym = GraphCore.symmetric(canonical)
-    val deg = GraphCore.degrees(canonical).withColumnRenamed("v", "src")
-    val links = sym.join(deg, "src")
-      .select(col("src"), col("dst"), col("deg"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // vertex set from the PERSISTED links table — no union+distinct exchange
-    // over the raw endpoints; identical set (see [[iterate]], round 7)
-    val verts = links.select(col("src").as("v")).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    val nS = verts.where(isSource(col("v"))).count()
-    require(nS > 0, "personalized PageRank needs at least one source vertex")
-    def tele(v: Column, mass: Double): Column =
-      when(isSource(v), lit(mass / nS)).otherwise(lit(0.0))
-    var ranks = verts.select(col("v"), tele(col("v"), 1.0).as("pr")).localCheckpoint(false)
-    for (i <- 1 to iters) {
-      val contrib = links
-        .join(ranks.withColumnRenamed("v", "src"), "src")
-        .select(col("dst").as("v"), (col("pr") / col("deg")).as("c"))
-        .groupBy("v")
-        .agg((tele(col("v"), 1.0 - damping) + lit(damping) * sum("c")).as("pr"))
-      ranks = if (i % lineageEvery == 0 || i == iters) contrib.localCheckpoint(false) else contrib
-    }
-    links.unpersist()
-    verts.unpersist()
-    ranks
-  }
+      damping: Double = 0.85): DataFrame =
+    iterate(GraphCore.symmetric(canonical), Nil, lit(1L), isSource, iters, None, damping)
 
   /** Fixed-iteration lineage-truncation period: every `lineageEvery` iterations
     * the rank table gets a (lazy) localCheckpoint, bounding plan depth without
     * a per-iteration cache materialization. */
   private[graft] val lineageEvery = 5
 
+  /** The PageRank loop over `sym`, the edges in both directions
+    * ([[GraphCore.symmetric]]). `keys` rank each key's subgraph independently
+    * (empty: one graph); `w` is the edge weight, evaluated on `sym`'s rows
+    * (`lit(1L)`: unweighted — pr·1 is exact, so each contribution equals
+    * pr/deg); teleport mass goes uniformly to the vertices matching `teleport`
+    * (`lit(true)`: global PageRank). Each key's teleport denominator n (its
+    * count of teleport vertices) rides WITH the rank rows — constant per key,
+    * re-emitted by `max` in the aggregate — so no iteration joins a counts
+    * table. `tol = None` runs exactly `maxIter` iterations. Output (keys…, v, pr). */
   private def iterate(
-      canonical: DataFrame,
+      sym: DataFrame,
+      keys: Seq[String],
+      w: Column,
+      teleport: Column => Column,
       maxIter: Int,
       tol: Option[Double],
       damping: Double,
-      checkpointDir: Option[String],
-      checkpointEvery: Int): DataFrame = {
-    val spark = canonical.sparkSession
-    val sym = GraphCore.symmetric(canonical)
-    val deg = GraphCore.degrees(canonical).withColumnRenamed("v", "src")
-    // (src, dst, deg): out-edges with the sender's out-degree, partitioned once by
-    // the join key every iteration reuses.
-    val links = sym.join(deg, "src")
-      .select(col("src"), col("dst"), col("deg"))
-      .repartition(col("src"))
+      checkpointDir: Option[String] = None,
+      checkpointEvery: Int = 5): DataFrame = {
+    val kc = keys.map(col)
+    val deg = sym.groupBy(kc :+ col("src"): _*).agg(sum(w).as("deg"))
+    // (keys, src, dst, [w,] deg): out-edges with the sender's (weighted) degree,
+    // partitioned once by the join key every iteration reuses
+    val links = sym.join(deg, keys :+ "src")
+      .repartition(kc :+ col("src"): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // vertex set from the PERSISTED links table: every vertex appears as src
-    // in the symmetrized sym, and the inner degree join preserves every sym
-    // row — identical set. The distinct inherits links' hash(src)
-    // partitioning and plans with NO exchange, vs the union + full-shuffle
-    // distinct of vertices(canonical) — an EDGE-scale exchange at the 100 TB
-    // design point (round 7; the LabelProp.run init uses the same derivation)
-    val verts = links.select(col("src").as("v")).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    val n = verts.count()
-    val base = (1.0 - damping) / n
+    // vertex set from the PERSISTED links table: every vertex appears as src in
+    // the symmetrized sym, and the inner degree join preserves every sym row —
+    // identical set. The distinct inherits links' hash(keys, src) partitioning
+    // and plans with NO exchange, vs an edge-scale shuffle of the raw endpoints
+    val verts = links.select(kc :+ col("src").as("v"): _*).distinct()
+    val n = verts.groupBy(kc: _*).agg(count(when(teleport(col("v")), 1)).as("n"))
+    def tele(mass: Double, n: Column): Column =
+      when(teleport(col("v")), lit(mass) / n).otherwise(lit(0.0))
 
-    val (startIter, startRanks) = checkpointDir.flatMap(Checkpoint.resume(spark, _)) match {
+    val (startIter, start) = checkpointDir.flatMap(Checkpoint.resume(sym.sparkSession, _)) match {
       case Some((i, snap)) => (i + 1, snap)
-      case None => (0, verts.select(col("v"), lit(1.0 / n).as("pr")))
+      case None =>
+        (0, verts.join(n, keys).select(kc :+ col("v") :+
+          when(col("n") === 0, raise_error(lit("PageRank needs at least one teleport vertex per key")))
+            .otherwise(tele(1.0, col("n"))).as("pr") :+ col("n"): _*))
     }
-
-    var ranks = startRanks.localCheckpoint(false)
+    var ranks = start.localCheckpoint(false)
     var iter = startIter
     var converged = false
     while (iter < maxIter && !converged) {
       // No per-iteration vertex left-join: the graph is symmetrized, so every
-      // vertex has an in-neighbor and appears in the contribution aggregate —
-      // the join would re-emit exactly these rows (one join + shuffle less per
-      // iteration; the round-2 driver bench spent a third of PageRank there).
+      // vertex has an in-neighbor and appears in the contribution aggregate.
       val contrib = links
-        .join(ranks.withColumnRenamed("v", "src"), "src")
-        .select(col("dst").as("v"), (col("pr") / col("deg")).as("c"))
-        .groupBy("v")
-        .agg((lit(base) + lit(damping) * sum("c")).as("pr"))
-      // LAZY checkpoint: in tol mode the convergence delta action materializes
-      // it in the same job and EVERY iteration must truncate (the delta action
-      // re-reads `next` and `ranks`); in fixed-iteration mode nothing reads the
-      // intermediate ranks, so truncating every iteration only buys bounded
-      // lineage — checkpoint every [[lineageEvery]] iterations instead (plan
-      // depth stays ≤ lineageEvery joins: same scale safety, fewer rank-table
-      // cache materializations in the one final job)
+        .join(ranks.withColumnRenamed("v", "src"), keys :+ "src")
+        .select(kc :+ col("dst").as("v") :+ (col("pr") * w / col("deg")).as("c") :+ col("n"): _*)
+        .groupBy(kc :+ col("v"): _*)
+        .agg((tele(1.0 - damping, max(col("n"))) + lit(damping) * sum(col("c"))).as("pr"),
+          max(col("n")).as("n"))
+      // LAZY checkpoint: in tol mode the delta action materializes it in the
+      // same job and EVERY iteration must truncate (the action re-reads `next`
+      // and `ranks`); in fixed-iteration mode nothing reads the intermediate
+      // ranks, so truncating every [[lineageEvery]] iterations bounds plan
+      // depth with fewer rank-table cache materializations in the final job
       val next =
         if (tol.isDefined || (iter - startIter) % lineageEvery == lineageEvery - 1
           || iter + 1 == maxIter)
           contrib.localCheckpoint(false)
         else contrib
       tol.foreach { t =>
-        val delta = next
-          .join(ranks.withColumnRenamed("pr", "pr_old"), "v")
-          .agg(max(abs(col("pr") - col("pr_old"))).as("d"))
-          .first().getDouble(0)
-        converged = delta < t
-        checkpointDir.foreach { dir =>
-          if ((iter + 1) % checkpointEvery == 0 || converged)
-            Checkpoint.save(next, dir, iter, Map("max_delta" -> delta, "n" -> n.toDouble))
-        }
+        // max |Δpr| as a union + per-vertex sum (pr + (−pr_old) is exactly
+        // pr − pr_old), not a join: a join of two checkpointed tables plans
+        // from their size estimates, which grow every iteration, and flips to
+        // a two-shuffle sort-merge form; this plan is one shuffle whatever
+        // the estimates. The row count is the vertex count (the "n" metric).
+        val r = next.select(kc :+ col("v") :+ col("pr"): _*)
+          .unionAll(ranks.select(kc :+ col("v") :+ (-col("pr")).as("pr"): _*))
+          .groupBy(kc :+ col("v"): _*).agg(sum(col("pr")).as("d"))
+          .agg(max(abs(col("d"))), count(lit(1)))
+          .first()
+        converged = r.getDouble(0) < t
+        Checkpoint.saveIfDue(checkpointDir, checkpointEvery, iter, converged || iter + 1 == maxIter)(
+          next, Map("max_delta" -> r.getDouble(0), "n" -> r.getLong(1).toDouble))
       }
       ranks = next
       iter += 1
     }
     links.unpersist()
-    verts.unpersist()
-    ranks
+    ranks.select(kc :+ col("v") :+ col("pr"): _*)
   }
 }

@@ -274,6 +274,15 @@ class PageRankSpec extends AnyFunSuite {
     assert(got(0L) > got(5L))
   }
 
+  test("personalized pagerank with no source vertex fails the query") {
+    val e = intercept[Exception] {
+      PageRank.personalizedFixedIterations(GraphCore.clean(edgeDF(fixtures.nvgraph8)),
+        _ => org.apache.spark.sql.functions.lit(false), 2).collect()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("at least one teleport vertex")))
+  }
+
   test("personalized pagerank with ALL vertices as sources equals global pagerank") {
     val canonical = GraphCore.clean(edgeDF(fixtures.nvgraph8))
     val ppr = PageRank.personalizedFixedIterations(canonical, _ => org.apache.spark.sql.functions.lit(true), 10)
@@ -355,6 +364,14 @@ class PageRankSpec extends AnyFunSuite {
     full.foreach { case (v, p) => assert(math.abs(p - resumed(v)) < 1e-12, s"v=$v") }
     Checkpoint.deleteRecursively(dir)
   }
+
+  test("a run stopped by maxIter, not convergence, certifies its last iteration") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    PageRank.run(GraphCore.clean(edgeDF(fixtures.nvgraph8)), maxIter = 3, tol = 0.0,
+      checkpointDir = Some(dir), checkpointEvery = 2).collect()
+    assert(Checkpoint.latestIter(dir) === Some(2))
+    Checkpoint.deleteRecursively(dir)
+  }
 }
 
 class LabelPropSpec extends AnyFunSuite {
@@ -408,6 +425,23 @@ class LabelPropSpec extends AnyFunSuite {
         weighted.withColumn("w", org.apache.spark.sql.functions.lit(1L)), 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(flat(2L) === 0L)
+  }
+
+  test("checkpoint + resume mid-run reproduces the uninterrupted labels") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val canonical = GraphCore.clean(edgeDF(fixtures.nvgraph8)).localCheckpoint(true)
+    def labels(): Map[Long, Long] = LabelProp.run(canonical, 6, checkpointDir = Some(dir), checkpointEvery = 2)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val full = labels()
+    // simulate a crash: drop the last manifests so resume starts mid-run
+    val kept = Checkpoint.latestIter(dir).get
+    (kept - 3 to kept).foreach { i =>
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$dir/manifest_$i.json"))
+    }
+    assert(Checkpoint.latestIter(dir).exists(_ < kept))
+    assert(labels() === full)
+    assert(Checkpoint.latestIter(dir) === Some(kept))
+    Checkpoint.deleteRecursively(dir)
   }
 
   test("step plans the argmax as a map-side-combinable aggregate — no window node") {
