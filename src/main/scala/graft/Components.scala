@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -36,7 +36,7 @@ object Components {
     * ≥10⁸-edge dense inputs at high thread-per-GB ratios). Results are
     * identical (differential-tested); the agg form persists each round's
     * symmetrized edge set for its two passes and drops it as soon as the
-    * round's checksum materializes. */
+    * round's checkpoint materializes. */
   def run(canonical: DataFrame, maxRounds: Int = 50, largeStarForm: String = "window"): DataFrame = {
     require(largeStarForm == "window" || largeStarForm == "agg",
       s"unknown largeStarForm '$largeStarForm' (window | agg)")
@@ -60,34 +60,32 @@ object Components {
   private def stars(input: DataFrame, keys: Seq[String], maxRounds: Int, largeStarForm: String): DataFrame = {
     val kc = keys.map(col)
     // Internal representation: every edge directed (src, dst) with src > dst.
-    var edges = input
+    var (edges, prev) = checkpointed(input
       .select(kc :+ greatest(col("src"), col("dst")).as("src") :+ least(col("src"), col("dst")).as("dst"): _*)
-      .distinct()
-      .localCheckpoint(false)
+      .distinct(), keys)
     // the CHECKPOINTED initial edge set also serves the final vertex-set
     // derivation (round-7): referencing `input` again there re-executed the
     // caller's whole upstream pipeline twice more — for the dedup/embed cluster
     // queries that upstream is the entire near-dup-pairs computation. Same
     // vertex set: e0 is `input` with per-edge orientation flipped.
     val e0 = edges
-    var prev = checksum(edges, keys) // first action → materializes the lazy checkpoint
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
       // both star phases are single-pass (window-min, no self-join), so the whole
-      // round is one chained plan with one lineage-truncating checkpoint; the
-      // checkpoint is LAZY so the convergence checksum materializes it in the same
-      // job — one job per round, not a materialize-then-checksum pair
+      // round is one chained plan with one lineage-truncating checkpoint, and
+      // the convergence checksum is observed on that checkpoint's own job —
+      // one action per round, not a materialize-then-checksum pair
       val roundSym =
         if (largeStarForm == "agg")
           Some(edges.unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         else None
       val ls = roundSym.map(largeStarAggOn).getOrElse(largeStar(edges, keys))
-      edges = smallStar(ls, keys).localCheckpoint(false)
-      val cur = checksum(edges, keys) // materializes the round; roundSym no longer needed
+      val (next, cur) = checkpointed(smallStar(ls, keys), keys)
       roundSym.foreach(_.unpersist(false))
       converged = cur == prev
+      edges = next
       prev = cur
       round += 1
     }
@@ -135,7 +133,7 @@ object Components {
 
   /** [[largeStarAgg]]'s plan over a caller-persisted symmetrized edge set —
     * [[run]]'s agg form persists per round and unpersists as soon as the
-    * round's checksum materializes (a tracker persist per round would
+    * round's checkpoint materializes (a tracker persist per round would
     * accumulate across a convergence run). */
   private[graft] def largeStarAggOn(sym: DataFrame): DataFrame = {
     val mins = sym.groupBy("src").agg(min(col("dst")).as("m"))
@@ -163,15 +161,18 @@ object Components {
       .distinct()
   }
 
-  /** Order-insensitive 64-bit fingerprint of an edge set (count, xor of row hashes).
-    * Used as the fixpoint test — an exact set compare would be an extra join per
-    * round for no practical gain at 64-bit collision odds. */
-  private def checksum(edges: DataFrame, keyCols: Seq[String] = Nil): (Long, Long) = {
-    val r = edges.agg(
+  /** `edges` eagerly local-checkpointed, with the order-insensitive 64-bit
+    * fingerprint of the set (count, xor of row hashes) observed on the same
+    * job. Used as the fixpoint test — an exact set compare would be an extra
+    * join per round for no practical gain at 64-bit collision odds. */
+  private def checkpointed(edges: DataFrame, keyCols: Seq[String]): (DataFrame, (Long, Long)) = {
+    val seen = Observation()
+    val cp = edges.observe(seen,
       count(lit(1)).as("c"),
-      coalesce(bit_xor(xxhash64(keyCols.map(col) :+ col("src") :+ col("dst"): _*)),
-        lit(0L)).as("h")).first()
-    (r.getLong(0), r.getLong(1))
+      coalesce(bit_xor(xxhash64(keyCols.map(col) :+ col("src") :+ col("dst"): _*)), lit(0L)).as("h"))
+      .localCheckpoint(true)
+    val m = seen.get
+    (cp, (m("c").asInstanceOf[Long], m("h").asInstanceOf[Long]))
   }
 
   /** Naive min-label propagation (O(diameter) rounds). Exact; test oracle for

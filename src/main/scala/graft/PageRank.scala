@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -15,13 +16,17 @@ import org.apache.spark.storage.StorageLevel
   * Every entry point runs the one loop, [[iterate]], parameterised by key
   * columns (per-key subgraphs), an edge weight and a teleport predicate.
   *
-  * Scale shape: the edge table is joined with out-degrees ONCE, hash-partitioned by
-  * (keys, `src`), and persisted — each iteration then shuffles only the rank table
-  * (one row per vertex) into that fixed partitioning and aggregates map-side.
-  * Tolerance mode takes one `max(abs(delta))` action and truncates lineage with a
-  * lazy `localCheckpoint` every iteration; fixed-iteration mode takes no action and
-  * truncates every [[lineageEvery]] iterations. Durable resumable snapshots go
-  * through [[Checkpoint]] when `checkpointDir` is set.
+  * Scale shape: the edge table is hash-partitioned ONCE by (keys, `src`), given
+  * each sender's out-degree by a window over that same partitioning (no degree
+  * aggregate, no join), and persisted — each iteration then shuffles only the
+  * rank table (one row per vertex) into that fixed partitioning and aggregates
+  * map-side. Tolerance mode takes ONE action an iteration: an eager
+  * `localCheckpoint` of the rank aggregate, into which the old ranks are unioned as zero
+  * contributions that carry `old`, so `max |pr − old|` and the row count are
+  * read off that same job with `Dataset.observe`. Fixed-iteration mode takes
+  * no action and truncates lineage with a lazy `localCheckpoint` every
+  * [[lineageEvery]] iterations. Durable resumable snapshots go through
+  * [[Checkpoint]] when `checkpointDir` is set.
   */
 object PageRank {
 
@@ -116,27 +121,30 @@ object PageRank {
       checkpointDir: Option[String] = None,
       checkpointEvery: Int = 5): DataFrame = {
     val kc = keys.map(col)
-    val deg = sym.groupBy(kc :+ col("src"): _*).agg(sum(w).as("deg"))
-    // (keys, src, dst, [w,] deg): out-edges with the sender's (weighted) degree,
-    // partitioned once by the join key every iteration reuses
-    val links = sym.join(deg, keys :+ "src")
-      .repartition(kc :+ col("src"): _*)
+    // (keys, src, dst, [w,] deg): out-edges with the sender's (weighted)
+    // degree, partitioned once by the join key every iteration reuses; the
+    // degree window runs inside that partitioning, so it adds no exchange
+    val links = sym.repartition(kc :+ col("src"): _*)
+      .withColumn("deg", sum(w).over(Window.partitionBy(kc :+ col("src"): _*)))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // vertex set from the PERSISTED links table: every vertex appears as src in
-    // the symmetrized sym, and the inner degree join preserves every sym row —
-    // identical set. The distinct inherits links' hash(keys, src) partitioning
-    // and plans with NO exchange, vs an edge-scale shuffle of the raw endpoints
+    // the symmetrized sym — identical set. The distinct inherits links'
+    // hash(keys, src) partitioning and plans with NO exchange, vs an
+    // edge-scale shuffle of the raw endpoints
     val verts = links.select(kc :+ col("src").as("v"): _*).distinct()
-    val n = verts.groupBy(kc: _*).agg(count(when(teleport(col("v")), 1)).as("n"))
     def tele(mass: Double, n: Column): Column =
       when(teleport(col("v")), lit(mass) / n).otherwise(lit(0.0))
 
     val (startIter, start) = checkpointDir.flatMap(Checkpoint.resume(sym.sparkSession, _)) match {
       case Some((i, snap)) => (i + 1, snap)
       case None =>
-        (0, verts.join(n, keys).select(kc :+ col("v") :+
-          when(col("n") === 0, raise_error(lit("PageRank needs at least one teleport vertex per key")))
-            .otherwise(tele(1.0, col("n"))).as("pr") :+ col("n"): _*))
+        // each key's teleport count as a window over its vertices, not an
+        // aggregate joined back (unkeyed, the window gathers the vertex set
+        // into one partition, once a run)
+        (0, verts.withColumn("n", count(when(teleport(col("v")), 1)).over(Window.partitionBy(kc: _*)))
+          .select(kc :+ col("v") :+
+            when(col("n") === 0, raise_error(lit("PageRank needs at least one teleport vertex per key")))
+              .otherwise(tele(1.0, col("n"))).as("pr") :+ col("n"): _*))
     }
     var ranks = start.localCheckpoint(false)
     var iter = startIter
@@ -147,35 +155,39 @@ object PageRank {
       val contrib = links
         .join(ranks.withColumnRenamed("v", "src"), keys :+ "src")
         .select(kc :+ col("dst").as("v") :+ (col("pr") * w / col("deg")).as("c") :+ col("n"): _*)
-        .groupBy(kc :+ col("v"): _*)
-        .agg((tele(1.0 - damping, max(col("n"))) + lit(damping) * sum(col("c"))).as("pr"),
-          max(col("n")).as("n"))
-      // LAZY checkpoint: in tol mode the delta action materializes it in the
-      // same job and EVERY iteration must truncate (the action re-reads `next`
-      // and `ranks`); in fixed-iteration mode nothing reads the intermediate
-      // ranks, so truncating every [[lineageEvery]] iterations bounds plan
-      // depth with fewer rank-table cache materializations in the final job
-      val next =
-        if (tol.isDefined || (iter - startIter) % lineageEvery == lineageEvery - 1
-          || iter + 1 == maxIter)
-          contrib.localCheckpoint(false)
-        else contrib
-      tol.foreach { t =>
-        // max |Δpr| as a union + per-vertex sum (pr + (−pr_old) is exactly
-        // pr − pr_old), not a join: a join of two checkpointed tables plans
-        // from their size estimates, which grow every iteration, and flips to
-        // a two-shuffle sort-merge form; this plan is one shuffle whatever
-        // the estimates. The row count is the vertex count (the "n" metric).
-        val r = next.select(kc :+ col("v") :+ col("pr"): _*)
-          .unionAll(ranks.select(kc :+ col("v") :+ (-col("pr")).as("pr"): _*))
-          .groupBy(kc :+ col("v"): _*).agg(sum(col("pr")).as("d"))
-          .agg(max(abs(col("d"))), count(lit(1)))
-          .first()
-        converged = r.getDouble(0) < t
-        Checkpoint.saveIfDue(checkpointDir, checkpointEvery, iter, converged || iter + 1 == maxIter)(
-          next, Map("max_delta" -> r.getDouble(0), "n" -> r.getLong(1).toDouble))
+      def aggregate(rows: DataFrame, extra: Column*): DataFrame =
+        rows.groupBy(kc :+ col("v"): _*)
+          .agg((tele(1.0 - damping, max(col("n"))) + lit(damping) * sum(col("c"))).as("pr"),
+            max(col("n")).as("n") +: extra: _*)
+      ranks = tol match {
+        case None =>
+          // nothing reads the intermediate ranks, so a LAZY checkpoint every
+          // [[lineageEvery]] iterations bounds plan depth with fewer
+          // rank-table cache materializations in the final job
+          val next = aggregate(contrib)
+          if ((iter - startIter) % lineageEvery == lineageEvery - 1 || iter + 1 == maxIter)
+            next.localCheckpoint(false)
+          else next
+        case Some(t) =>
+          // the old ranks enter the aggregate as zero contributions carrying
+          // `old` (a sum plus 0.0 is exactly the sum), so the iteration's one
+          // eager checkpoint also yields max |pr − old| and the vertex count
+          // (the "n" metric)
+          val seen = Observation()
+          val next = aggregate(
+            contrib.withColumn("old", lit(null).cast("double"))
+              .unionAll(ranks.select(kc :+ col("v") :+ lit(0.0).as("c") :+ col("n") :+ col("pr").as("old"): _*)),
+            max(col("old")).as("old"))
+            .observe(seen, max(abs(col("pr") - col("old"))).as("d"), count(lit(1)).as("rows"))
+            .localCheckpoint(true)
+            .select(kc :+ col("v") :+ col("pr") :+ col("n"): _*)
+          val m = seen.get
+          val d = m("d").asInstanceOf[Double]
+          converged = d < t
+          Checkpoint.saveIfDue(checkpointDir, checkpointEvery, iter, converged || iter + 1 == maxIter)(
+            next, Map("max_delta" -> d, "n" -> m("rows").asInstanceOf[Long].toDouble))
+          next
       }
-      ranks = next
       iter += 1
     }
     links.unpersist()

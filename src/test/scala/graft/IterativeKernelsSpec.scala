@@ -88,6 +88,15 @@ class ComponentsSpec extends AnyFunSuite {
     }
   }
 
+  test("job count: each star round is one action, its fixpoint checksum observed on its checkpoint") {
+    // a separate checksum action per round (and one for the initial edge
+    // set) made this 25 jobs
+    val canonical = GraphCore.clean(edgeDF(fixtures.nvgraph8)).localCheckpoint(true)
+    val (got, jobs) = JobCounter(Components.run(canonical).collect())
+    assert(got.map(_.getLong(1)).toSet === Set(0L))
+    assert(jobs === 21, s"Components.run on nvgraph8 took $jobs jobs")
+  }
+
   test("differential: large/small-star equals min-propagation on seeded random graphs") {
     (1 to 3).foreach { seed =>
       val rnd = new scala.util.Random(seed)
@@ -345,6 +354,18 @@ class PageRankSpec extends AnyFunSuite {
     }
   }
 
+  test("job count: a tolerance run with checkpoints takes one action an iteration and one write a snapshot") {
+    // a separate max |Δpr| action per iteration and a snapshot re-read per
+    // save made this 153 jobs
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val canonical = GraphCore.clean(edgeDF(fixtures.nvgraph8)).localCheckpoint(true)
+    val (_, jobs) = JobCounter(PageRank.run(canonical, tol = 1e-6, checkpointDir = Some(dir)).collect())
+    val iters = Checkpoint.latestIter(dir).get + 1
+    assert(iters === 25)
+    assert(jobs === 84, s"PageRank.run on nvgraph8 took $jobs jobs for $iters iterations")
+    Checkpoint.deleteRecursively(dir)
+  }
+
   test("checkpoint + resume mid-run reproduces the uninterrupted result") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val canonical = GraphCore.clean(edgeDF(fixtures.nvgraph8)).localCheckpoint(true)
@@ -444,6 +465,15 @@ class LabelPropSpec extends AnyFunSuite {
     Checkpoint.deleteRecursively(dir)
   }
 
+  test("job count: a checkpointed run takes one write job a snapshot and no re-read") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val canonical = GraphCore.clean(edgeDF(fixtures.nvgraph8)).localCheckpoint(true)
+    val (_, jobs) = JobCounter(LabelProp.run(canonical, 6, checkpointDir = Some(dir), checkpointEvery = 2).collect())
+    // three snapshots that each read themselves back made this 33 jobs
+    assert(jobs === 24, s"LabelProp.run on nvgraph8 took $jobs jobs")
+    Checkpoint.deleteRecursively(dir)
+  }
+
   test("step plans the argmax as a map-side-combinable aggregate — no window node") {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     val canonical = GraphCore.clean(edgeDF(fixtures.nvgraph8))
@@ -454,5 +484,65 @@ class LabelPropSpec extends AnyFunSuite {
     val plan = LabelProp.step(sym, labels).queryExecution.optimizedPlan
     assert(plan.collect { case w: LWindow => w }.isEmpty,
       "round-3 row_number argmax re-shuffled and sorted the count table per step")
+  }
+}
+
+class CheckpointSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  private def manifest(dir: String, iter: Int): org.json4s.JValue = {
+    val text = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/manifest_$iter.json")), java.nio.charset.StandardCharsets.UTF_8)
+    org.json4s.jackson.JsonMethods.parse(text)
+  }
+
+  test("job count: save is one Spark job, the parquet write") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val state = GraphCore.clean(edgeDF(fixtures.nvgraph8)).localCheckpoint(true)
+    val (_, jobs) = JobCounter(Checkpoint.save(state, dir, 0))
+    // the write, then a re-read grouped by partition id, made this 4 jobs
+    assert(jobs === 1)
+    Checkpoint.deleteRecursively(dir)
+  }
+
+  test("manifest contents: rows, partition rows and max_delta agree with the snapshots and fixed iterations") {
+    import org.json4s._
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val canonical = GraphCore.clean(edgeDF(fixtures.nvgraph8)).localCheckpoint(true)
+    PageRank.run(canonical, tol = 1e-6, checkpointDir = Some(dir)).collect()
+    val iters = (0 to Checkpoint.latestIter(dir).get)
+      .filter(i => java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/manifest_$i.json")))
+    assert(iters.size >= 2, s"expected several snapshots, got iterations $iters")
+    iters.foreach { i =>
+      val m = manifest(dir, i)
+      val rows = (m \ "rows").asInstanceOf[JInt].num.toLong
+      assert(rows === Checkpoint.load(spark, dir, i).count(), s"iter $i")
+      val parts = (m \ "partitions").asInstanceOf[JArray].arr.map(p => (p \ "rows").asInstanceOf[JInt].num.toLong)
+      assert(parts.sum === rows, s"iter $i")
+      // manifest i certifies the state after i + 1 iterations
+      val want = PageRank.fixedIterations(canonical, i + 1).withColumnRenamed("pr", "a")
+        .join(PageRank.fixedIterations(canonical, i).withColumnRenamed("pr", "b"), "v")
+        .agg(max(abs(col("a") - col("b")))).first().getDouble(0)
+      val got = (m \ "metrics" \ "max_delta").asInstanceOf[JDouble].num
+      assert(math.abs(got - want) <= 1e-12, s"iter $i: max_delta $got, expected $want")
+    }
+    Checkpoint.deleteRecursively(dir)
+  }
+
+  test("manifest JSON: escaped path and metric keys, non-finite metrics as null") {
+    import org.json4s._
+    val root = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = s"$root/a \"quoted\" dir"
+    val state = GraphCore.clean(edgeDF(fixtures.tri1)).localCheckpoint(true)
+    Checkpoint.save(state, dir, 3, Map("max_delta" -> Double.NaN, "up\"per" -> Double.PositiveInfinity,
+      "back\\slash" -> Double.NegativeInfinity, "n" -> 3.0))
+    val m = manifest(dir, 3)
+    assert((m \ "path") === JString(s"$dir/iter_3"))
+    assert((m \ "rows") === JInt(3))
+    assert((m \ "metrics") === JObject("max_delta" -> JNull, "up\"per" -> JNull,
+      "back\\slash" -> JNull, "n" -> JDouble(3.0)))
+    assert(Checkpoint.resume(spark, dir).map { case (i, df) => (i, df.count()) } === Some((3, 3L)))
+    Checkpoint.deleteRecursively(root)
   }
 }
