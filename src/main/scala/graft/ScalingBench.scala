@@ -37,8 +37,9 @@ object ScalingBench {
         TriangleCount.globalAdjacency(spark, o, GraphCore.adjacency(o).persist())
       }),
       // the out-of-core fallback, forced to 4 shards with 2 block pairs per
-      // wave job (resident adjacency ≤ 4 blocks = the full CSR at 4 shards;
-      // production sizes shards so concurrency × 2 blocks fit) — evidences
+      // wave job (each wave streams its src blocks and broadcasts only its
+      // dst blocks: resident adjacency ≤ 2 blocks = half the CSR at 4 shards;
+      // production sizes shards so concurrency blocks fit) — evidences
       // that the beyond-executor-memory plan also completes and scales
       "triangles_sharded" -> (() => {
         val o = oriented().persist()

@@ -140,12 +140,12 @@ object SparkEntry {
     "triangles_per_vertex_adj" -> ((s, d) => {
       val o = orientedOf(s, d)
       // persisted: the auto-select size probe is an eager aggregation over the
-      // adjacency, and the plan then reads it from both broadcast sides
+      // adjacency, and the plan then reads it as the probe's stream and broadcast side
       TriangleCount.perVertexAdjacency(canonical(s, d), o,
         CacheTracker.persist(GraphCore.adjacency(o)))
     }),
     // out-of-core per-vertex twin (forced 3 shards) — credit partials roll up
-    // per wave of two block pairs, so no job ever holds more than four adjacency
+    // per wave of two block pairs, so no job ever holds more than two adjacency
     // blocks; concurrency 2 value-checks the associative merge across waves
     "triangles_per_vertex_sharded" -> ((s, d) => {
       val o = orientedOf(s, d)

@@ -21,21 +21,23 @@ import graft.expr.SortedIntersectCount
   *
   *  - Adjacency: ONE tiling core ([[tiled]]) serves the four adjacency kernels
   *    (global count, per-vertex counts, per-edge support, per-edge membership).
-  *    It yields probed rows (src, dst, nbrs_u, nbrs_v): the oriented edge stream
-  *    hash-probes the BROADCAST CSR-style adjacency twice (src and dst sides)
-  *    inside one codegen stage — neighbor arrays never enter a shuffle or sort.
-  *    Each kernel is only a [[Kernel]]: key columns plus a credit function over
-  *    the probed rows; credits are summed per key and left-joined onto the key
-  *    universe. The tiling is either
+  *    It yields probed rows (src, dst, nbrs_u, nbrs_v): the adjacency streams
+  *    itself, each row (u, N⁺(u)) exploded into its oriented edges, and hash-probes
+  *    ONE broadcast copy of the CSR-style adjacency on dst for N⁺(v) inside one
+  *    codegen stage — neighbor arrays never enter a shuffle or sort. The
+  *    adjacency is the only table the probe reads. Each kernel is only a
+  *    [[Kernel]]: key columns plus a credit function over the probed rows;
+  *    credits are summed per key and left-joined onto the key universe. The
+  *    tiling is either
   *      - the 1×1 tile: the whole adjacency broadcast (every reference rank holds
   *        the full graph), or
   *      - sharded tiles when the adjacency exceeds the broadcast budget — the
   *        reference's out-of-core chunk-pair split kernel (gpu.cu:27-58, chosen
   *        at main.cpp:85-97): vertices cut into [[GraphCore.csrBlocks]] ranges,
   *        and each wave of `concurrency` non-empty block pairs runs as one Spark
-  *        job that broadcasts only the blocks those pairs touch (≤ 2 ×
-  *        concurrency blocks resident). Wave partials fold through one
-  *        [[CreditAccumulator]].
+  *        job that streams the pairs' src blocks and broadcasts only their dst
+  *        blocks (≤ concurrency blocks resident). Wave partials fold through
+  *        one [[CreditAccumulator]].
   *    The auto-select between the two ([[autoTiles]]) runs once per call.
   */
 object TriangleCount {
@@ -144,44 +146,48 @@ object TriangleCount {
     * physical shape): [[SortedIntersectCount]], the codegen two-pointer merge,
     * per probed edge, then one partial+final sum (the Spark analog of OpenMP
     * `reduction(+:sum)` at TrCountingGraph.cpp:389 and `thrust::reduce` at
-    * gpu-thrust.cu:24-27). `adj` must be [[GraphCore.adjacency]] of `oriented`.
+    * gpu-thrust.cu:24-27). `adj` must be [[GraphCore.adjacency]] of `oriented`;
+    * the adjacency is the only table the probe reads.
     * Output: single row (triangles: long). */
   def globalAdjacency(spark: SparkSession, oriented: DataFrame, adj: DataFrame): DataFrame =
-    tiled(oriented, adj, globalKernel, autoTiles(adj))
+    tiled(adj, globalKernel, autoTiles(adj))
 
   /** [[globalAdjacency]] on `shards` × `shards` block-pair tiles, `concurrency`
     * pairs per wave job. */
   def globalAdjacencySharded(spark: SparkSession, oriented: DataFrame, adj: DataFrame,
       shards: Int, concurrency: Int = 1): DataFrame =
-    tiled(oriented, adj, globalKernel, Some(Tiles(shards, concurrency)))
+    tiled(adj, globalKernel, Some(Tiles(shards, concurrency)))
 
   /** Per-vertex triangle counts in the adjacency form: for each oriented edge
     * (u,v), every w ∈ N⁺(u) ∩ N⁺(v) closes one triangle {u,v,w} — u, v and w each
     * get one credit. Materializes only the actual intersection elements
     * (O(#triangles) rows), never the O(m^1.5) wedge set of the relational form.
+    * The probe reads only `adj`; `canonical` is the vertex universe.
     * Output (v, tri_cnt), zero rows included — identical to [[perVertex]]. */
   def perVertexAdjacency(canonical: DataFrame, oriented: DataFrame, adj: DataFrame): DataFrame =
-    tiled(oriented, adj, vertexKernel(canonical), autoTiles(adj))
+    tiled(adj, vertexKernel(canonical), autoTiles(adj))
 
   /** [[perVertexAdjacency]] on `shards` × `shards` block-pair tiles. */
   def perVertexAdjacencySharded(spark: SparkSession, canonical: DataFrame, oriented: DataFrame,
       adj: DataFrame, shards: Int, concurrency: Int = 1): DataFrame =
-    tiled(oriented, adj, vertexKernel(canonical), Some(Tiles(shards, concurrency)))
+    tiled(adj, vertexKernel(canonical), Some(Tiles(shards, concurrency)))
 
   /** Per-edge triangle support: |N⁺(u) ∩ N⁺(v)| for EVERY oriented edge (u, v),
     * zero rows included — the per-edge refinement of the global count
-    * (Σ support = triangles). Output (src, dst, support). */
+    * (Σ support = triangles). The probe reads only `adj`; `oriented` is the
+    * key universe. Output (src, dst, support). */
   def edgeSupport(spark: SparkSession, oriented: DataFrame, adj: DataFrame): DataFrame =
-    tiled(oriented, adj, supportKernel(oriented), autoTiles(adj))
+    tiled(adj, supportKernel(oriented), autoTiles(adj))
 
   /** Per-edge triangle MEMBERSHIP counts — each triangle {u,v,w} credits ALL
     * THREE of its edges (Σ tri_cnt = 3·triangles), unlike [[edgeSupport]]'s
     * base-edge counts (Σ = triangles). This is the k-truss peel criterion.
     * Under the acyclic orientation u→v, u→w, v→w, the witness rows of base
     * edge (u,v) credit (u,v), (u,w) and (v,w) — all of them oriented edges.
+    * The probe reads only `adj`; `oriented` is the key universe.
     * Output (src, dst, tri_cnt), zero rows included. */
   def edgeTriangleCounts(spark: SparkSession, oriented: DataFrame, adj: DataFrame): DataFrame =
-    tiled(oriented, adj, membershipKernel(oriented), autoTiles(adj))
+    tiled(adj, membershipKernel(oriented), autoTiles(adj))
 
   // --- kernels: key columns + a credit function over probed rows --------------
 
@@ -241,18 +247,17 @@ object TriangleCount {
   private[graft] val MergeFanIn: Int = 8
 
   /** Run `kernel` over `tiles` (None = the 1×1 tile) and finish it. */
-  private[graft] def tiled(oriented: DataFrame, adj: DataFrame, kernel: Kernel,
-      tiles: Option[Tiles]): DataFrame = {
-    SortedIntersectCount.register(oriented.sparkSession)
+  private[graft] def tiled(adj: DataFrame, kernel: Kernel, tiles: Option[Tiles]): DataFrame = {
+    SortedIntersectCount.register(adj.sparkSession)
     val sums = tiles match {
-      case None => keyedSum(kernel.keys, kernel.credit(probe(oriented, adj, adj)))
+      case None => keyedSum(kernel.keys, kernel.credit(probe(adj, adj)))
       case Some(t) =>
         // each wave partial is materialized (eager localCheckpoint) by its own
         // job, so only that wave's broadcast blocks are ever resident
         val acc = new CreditAccumulator(kernel.keys, MergeFanIn)
-        waves(oriented, adj, t).foreach(p =>
+        waves(adj, t).foreach(p =>
           acc.add(keyedSum(kernel.keys, kernel.credit(p)).localCheckpoint(true)))
-        acc.result().getOrElse(keyedSum(kernel.keys, oriented.sparkSession.range(0)
+        acc.result().getOrElse(keyedSum(kernel.keys, adj.sparkSession.range(0)
           .select((kernel.keys :+ "cnt").map(col("id").as(_)): _*)))
     }
     kernel.finish(sums)
@@ -262,43 +267,49 @@ object TriangleCount {
   private def keyedSum(keys: Seq[String], credits: DataFrame): DataFrame =
     credits.groupBy(keys.map(col): _*).agg(sum(col("cnt")).as("cnt"))
 
-  /** THE broadcast probe: `edges` (src, dst, …) hash-probe the broadcast `srcAdj`
-    * on src and `dstAdj` on dst. Inner joins: an edge whose dst has out-degree 0
-    * closes no triangle (the kernel's left join restores its zero row). */
-  private[graft] def probe(edges: DataFrame, srcAdj: DataFrame, dstAdj: DataFrame): DataFrame =
-    edges
-      .join(broadcast(srcAdj.select(col("v").as("src"), col("nbrs").as("nbrs_u"))), "src")
-      .join(broadcast(dstAdj.select(col("v").as("dst"), col("nbrs").as("nbrs_v"))), "dst")
+  /** THE probe, with one broadcast side: the adjacency streams itself. Each
+    * `srcAdj` row (v, nbrs) explodes into one row (src, nbrs_u, dst) per
+    * oriented edge — N⁺(u) is the segment being scanned, as in the reference's
+    * CSR walk (TrCountingGraph.cpp:397-410) — and hash-probes the broadcast
+    * `dstAdj` on dst for nbrs_v. Any column of either side beyond (v, deg,
+    * nbrs) rides along (the waves' block ids). Inner join: an edge whose dst
+    * has out-degree 0 closes no triangle (the kernel's left join restores its
+    * zero row). */
+  private[graft] def probe(srcAdj: DataFrame, dstAdj: DataFrame): DataFrame = {
+    def side(a: DataFrame, v: String, nbrs: String) =
+      a.drop("deg").withColumnsRenamed(Map("v" -> v, "nbrs" -> nbrs))
+    side(srcAdj, "src", "nbrs_u").withColumn("dst", explode(col("nbrs_u")))
+      .join(broadcast(side(dstAdj, "dst", "nbrs_v")), "dst")
+  }
 
   /** Sharded tiles as probed rows, one frame per wave. Each oriented edge (u, v)
     * belongs to block pair (block(u), block(v)) and so to exactly one wave; a
-    * wave of ≤ `concurrency` non-empty pairs broadcasts only the src blocks and
-    * dst blocks those pairs name — ≤ 2 × concurrency blocks, the same bound the
-    * reference's chunk-pair launches keep, while the edge table (persisted,
-    * block-tagged) is rescanned per wave the way the reference re-reads its
-    * edge list per chunk pair. Adjacency blocks are re-broadcast ≤ 2·shards
-    * times: the price of never holding the full CSR. */
-  private[graft] def waves(oriented: DataFrame, adj: DataFrame, t: Tiles): Iterator[DataFrame] = {
+    * wave of ≤ `concurrency` non-empty pairs streams the adjacency rows of the
+    * src blocks those pairs name, broadcasts only their dst blocks — ≤
+    * concurrency blocks resident, the bound the reference's chunk-pair
+    * launches keep — and keeps the rows whose pair is in the wave. The
+    * persisted block-tagged adjacency is rescanned per wave the way the
+    * reference re-reads its edge list per chunk pair; dst blocks are
+    * re-broadcast ≤ shards times: the price of never holding the full CSR. */
+  private[graft] def waves(adj: DataFrame, t: Tiles): Iterator[DataFrame] = {
     // checkpointed: the O(vertices) block table cuts csrBlocks' window and join
     // lineage, which every wave plan would otherwise re-analyze (about half
     // of a wave's time on a 7-shard test graph)
     val blocks = GraphCore.csrBlocks(adj, t.shards).select(col("v"), col("block")).localCheckpoint(true)
     // (v, nbrs, block): the CSR with its block id — filtered per wave
     val adjB = CacheTracker.persist(adj.join(blocks, "v").select(col("v"), col("nbrs"), col("block")))
-    // (src, dst, pair = bs·shards + bd): edges tagged with both endpoint
-    // blocks. A dst with out-degree 0 has no adjacency row — its edges drop
-    // here, exactly as the probe's inner joins drop them.
-    val eB = CacheTracker.persist(oriented
-      .join(blocks.select(col("v").as("src"), col("block").as("bs")), "src")
-      .join(blocks.select(col("v").as("dst"), col("block").as("bd")), "dst")
-      .select(col("src"), col("dst"), (col("bs") * t.shards + col("bd")).as("pair")))
-    val pairs = eB.select(col("pair")).distinct().collect().map(_.getLong(0)).sorted // ≤ shards²
+    def pair(bs: Column, bd: Column) = bs * t.shards + bd
+    // the non-empty pairs (≤ shards²), off the exploded adjacency: a dst with
+    // out-degree 0 has no block, and its edges drop here as in the probe
+    val pairs = adjB.select(col("block").as("bs"), explode(col("nbrs")).as("v")).join(blocks, "v")
+      .select(pair(col("bs"), col("block"))).distinct().collect().map(_.getLong(0)).sorted
     // wave ids enter the plan as array literals, which codegen passes by
     // reference: every wave reuses the first wave's compiled code
-    def in(c: String, ids: Seq[Long]) = array_contains(typedLit(ids.distinct), col(c))
+    def in(c: Column, ids: Seq[Long]) = array_contains(typedLit(ids.distinct), c)
+    def tagged(ids: Seq[Long], tag: String) = adjB.where(in(col("block"), ids)).withColumnRenamed("block", tag)
     pairs.grouped(t.concurrency).map(_.toSeq).map { wave =>
-      probe(eB.where(in("pair", wave)),
-        adjB.where(in("block", wave.map(_ / t.shards))), adjB.where(in("block", wave.map(_ % t.shards))))
+      probe(tagged(wave.map(_ / t.shards), "bs"), tagged(wave.map(_ % t.shards), "bd"))
+        .where(in(pair(col("bs"), col("bd")), wave))
     }
   }
 
@@ -337,12 +348,12 @@ object TriangleCount {
 
   /** Cap of the auto-derived broadcast budget when the session carries no
     * executor sizing (2 GiB: a quarter of Spark's own 8 GiB broadcast-table
-    * hard limit, sized so two adjacency blocks plus the build-side hash maps
-    * fit a typical executor). */
+    * hard limit: the one resident adjacency copy plus its build-side hash map
+    * fits a typical executor with a 2× margin). */
   val defaultMaxBroadcastBytes: Long = 2L << 30
 
   /** Block pairs per wave job when the auto-select shards — resident adjacency is
-    * bounded by 2 × this many blocks. Override per session with
+    * bounded by this many (dst) blocks. Override per session with
     * `spark.graft.pairConcurrency`. */
   val defaultPairConcurrency: Int = 4
 
@@ -371,8 +382,10 @@ object TriangleCount {
   /** Resolve the broadcast budget for the auto-select. Priority:
     * session conf `spark.graft.maxBroadcastBytes`
     * (size string, e.g. "512m") > derived from `spark.executor.memory` ×
-    * `spark.memory.fraction` × 1/4 (two blocks + two broadcast hash maps live per
-    * wave), capped at [[defaultMaxBroadcastBytes]]. When the session carries
+    * `spark.memory.fraction` × 1/4, capped at [[defaultMaxBroadcastBytes]]. The
+    * probe holds one broadcast copy, roughly doubled in memory by its hash
+    * map, so the /4 leaves a 2× margin over it; change it only from a measured
+    * heap reading, since it decides which inputs shard. When the session carries
     * NO executor sizing (local mode — the driver JVM is the executor), the
     * basis is the ACTUAL runtime heap, not a fixed floor: round 5 found the
     * old 2 GiB floor auto-selecting a ~1.2 GB adjacency broadcast inside an
@@ -410,14 +423,15 @@ object TriangleCount {
     }
 
   /** Block budget for the sharded tiles' `autoShards` sizing. The broadcast-mode
-    * budget assumes two resident copies of the relation (adjU + adjV, each
-    * roughly doubled in memory by the broadcast build — hence the /4 in
-    * [[resolveMaxBroadcastBytes]]); a wave instead holds `concurrency × 2`
-    * blocks live, so the per-block budget must shrink by concurrency/2 or the
-    * wave overcommits the same heap the budget was derived from. Round 5
-    * measured exactly that: 3 shards × 4 concurrent pairs = 8 live ~380 MB
-    * block broadcasts OOMing the 8 GB JVM whose budget said the plan fit. The
-    * ceiling division keeps odd widths within the ≤2×-budget resident bound. */
+    * budget leaves a 2× margin over one resident copy of the relation (the /4
+    * in [[resolveMaxBroadcastBytes]]). A wave holds its ≤ `concurrency` dst
+    * blocks live, each sized by [[autoShards]] to half the budget it is
+    * given, so the per-block budget shrinks by concurrency/2 and a wave's
+    * resident blocks stay within the heap share of one full broadcast copy —
+    * again with the 2× margin. Round 5 measured the overcommit this prevents:
+    * 3 shards × 4 concurrent pairs = 8 live ~380 MB block broadcasts OOMing
+    * the 8 GB JVM whose budget said the plan fit. The ceiling division keeps
+    * odd widths within the bound. */
   private[graft] def resolveShardBudget(budget: Long, concurrency: Int): Long =
     math.max(1L, budget / math.max(1, (concurrency + 1) / 2))
 
@@ -425,10 +439,12 @@ object TriangleCount {
     * kernel enumerates the same split_num² chunk pairs, main.cpp:87-90). */
   private[graft] val maxShards = 1024L
 
-  /** Shard count so two adjacency blocks fit `maxBroadcastBytes`, capped at
-    * [[maxShards]]. Past the cap the two-blocks-fit invariant can no longer
-    * hold — warn loudly (round-3 advice: silent breakage at ~>1 TiB adjacency)
-    * rather than fail: the job may still complete on a large executor. */
+  /** Shard count so two adjacency blocks fit `maxBroadcastBytes` (a wave
+    * broadcasts only its dst blocks, so this is a 2× margin per pair), capped
+    * at [[maxShards]]. Past the cap the two-blocks-fit invariant can no
+    * longer hold — warn loudly (round-3 advice: silent breakage at ~>1 TiB
+    * adjacency) rather than fail: the job may still complete on a large
+    * executor. */
   private[graft] def autoShards(bytes: Long, maxBroadcastBytes: Long): Int = {
     val raw = math.max(2L, (2L * bytes + maxBroadcastBytes - 1) / maxBroadcastBytes)
     val shards = raw.min(maxShards).toInt
@@ -443,7 +459,8 @@ object TriangleCount {
 
   /** Persist-and-track `adj` unless the caller already did: the auto-select size
     * probe is an EAGER aggregation, and the kernel plan then reads the
-    * adjacency from both broadcast sides — unpersisted, the whole adjacency
+    * adjacency twice more, as the probe's stream and as its broadcast side (or
+    * the block table's source) — unpersisted, the whole adjacency
     * aggregation would run twice (round-3 advice: external callers on the old
     * lazy contract silently doubled their work). */
   private def ensurePersisted(adj: DataFrame): Unit =

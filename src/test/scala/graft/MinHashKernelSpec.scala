@@ -155,6 +155,19 @@ class MinHashKernelSpec extends AnyFunSuite {
     }
   }
 
+  test("shingle hash is injective on the sf0.01 and sf0.1 documents corpora (k = 5, 13)") {
+    // every set size and pairwise intersection the hashed dedup forms compute
+    // equals its shingle-string twin only while no two distinct shingles share
+    // a hash: a collision here fails loudly instead of as a later oracle diff
+    for (dir <- Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1"); kk <- Seq(5, 13)) {
+      val strings = Dedup.shingles(spark.read.parquet(s"$dir/documents.parquet"), kk)
+        .select(col("sh")).distinct()
+      val r = strings.agg(count(lit(1)), count_distinct(Dedup.shingleHash(col("sh"), kk))).first()
+      assert(r.getLong(0) > 0L, s"$dir k=$kk: no shingles")
+      assert(r.getLong(0) === r.getLong(1), s"$dir k=$kk: distinct shingles vs distinct hashes")
+    }
+  }
+
   test("invalid UTF-8: kernel == LEGACY byte-walk pipeline (real differential, not the " +
     "round-6 tautology)") {
     import org.apache.spark.unsafe.types.UTF8String

@@ -130,7 +130,7 @@ class TriangleCountSpec extends AnyFunSuite {
       val oriented = GraphCore.orient(canonical, GraphCore.degrees(canonical)).localCheckpoint(true)
       val adj = CacheTracker.persist(GraphCore.adjacency(oriented))
       val ks = kernels(canonical, oriented).filter { case (k, _) => only(k) }
-      val oneByOne = ks.map { case (k, kernel) => k -> rows(TriangleCount.tiled(oriented, adj, kernel, None)) }.toMap
+      val oneByOne = ks.map { case (k, kernel) => k -> rows(TriangleCount.tiled(adj, kernel, None)) }.toMap
       if (only("global")) {
         val relational = TriangleCount.globalRelational(oriented).first().getLong(0)
         assert(oneByOne("global") === Seq(relational.toString), s"$name: 1×1 global vs relational")
@@ -144,7 +144,7 @@ class TriangleCountSpec extends AnyFunSuite {
         for (conc <- concs) {
           mostWaves = math.max(mostWaves, (pairs + conc - 1) / conc)
           for ((k, kernel) <- ks)
-            assert(rows(TriangleCount.tiled(oriented, adj, kernel, Some(TriangleCount.Tiles(shards, conc))))
+            assert(rows(TriangleCount.tiled(adj, kernel, Some(TriangleCount.Tiles(shards, conc))))
               === oneByOne(k), s"$name: $k @ $shards shards × $conc")
         }
       }
@@ -436,9 +436,26 @@ class TriangleCountSpec extends AnyFunSuite {
     }
   }
 
+  test("job count: each tile reads the adjacency alone — one broadcast per probe, no edge table") {
+    // a second broadcast per probe, or a re-added block-tagged edge table,
+    // raises these counts (the two-sided probe with one took 6 / 32 / 8 / 7)
+    val canonical = GraphCore.clean(edgeDF(fixtures.nvgraph8)).localCheckpoint(true)
+    val oriented = GraphCore.orient(canonical, GraphCore.degrees(canonical)).localCheckpoint(true)
+    val adj = CacheTracker.persist(GraphCore.adjacency(oriented))
+    adj.count()
+    def jobs(df: => org.apache.spark.sql.DataFrame): Int = JobCounter(df.collect())._2
+    val got = Seq(
+      jobs(TriangleCount.globalAdjacency(spark, oriented, adj)),
+      jobs(TriangleCount.globalAdjacencySharded(spark, oriented, adj, 2, 1)),
+      jobs(TriangleCount.perVertexAdjacency(canonical, oriented, adj)),
+      jobs(TriangleCount.edgeSupport(spark, oriented, adj)))
+    assert(got === Seq(5, 26, 7, 5), "global / 2-shard global / per-vertex / edge support")
+    CacheTracker.release(spark)
+  }
+
   test("sharded pair jobs use broadcast hash joins — no sort-merge join of array payloads") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     object aqe extends AdaptiveSparkPlanHelper
     val canonical = GraphCore.clean(edgeDF(fixtures.nvgraph8))
     val oriented = GraphCore.orient(canonical, GraphCore.degrees(canonical))
@@ -447,11 +464,12 @@ class TriangleCountSpec extends AnyFunSuite {
     // the shared probe as the 1×1 tile and as a wave of a 2-shard tiling,
     // under every kernel's credit function and keyed sum
     val probes = Seq(
-      "1×1" -> TriangleCount.probe(oriented, adj, adj),
-      "2-shard" -> TriangleCount.waves(oriented, adj, TriangleCount.Tiles(2, 1)).next())
+      "1×1" -> TriangleCount.probe(adj, adj),
+      "2-shard" -> TriangleCount.waves(adj, TriangleCount.Tiles(2, 1)).next())
     for ((tile, probed) <- probes; (k, kernel) <- kernels(canonical, oriented)) {
-      val plan = kernel.credit(probed).groupBy(kernel.keys.map(col): _*).agg(sum("cnt"))
-        .queryExecution.executedPlan
+      val summed = kernel.credit(probed).groupBy(kernel.keys.map(col): _*).agg(sum("cnt"))
+      summed.collect()
+      val plan = summed.queryExecution.executedPlan
       val text = plan.toString
       assert(text.contains("BroadcastHashJoin"), s"$tile/$k: expected broadcast joins:\n$text")
       assert(!text.contains("SortMergeJoin"), s"$tile/$k: array payload must never sort-merge:\n$text")
@@ -459,6 +477,11 @@ class TriangleCountSpec extends AnyFunSuite {
         case e: ShuffleExchangeExec if e.output.exists(_.name.startsWith("nbrs")) => e
       }
       assert(arrayShuffles.isEmpty, s"$tile/$k: an exchange carries neighbor arrays:\n$text")
+      // one build side per probe: the adjacency streams itself, only N⁺(v) is broadcast
+      val arrayBroadcasts = aqe.collect(plan) {
+        case e: BroadcastExchangeExec if e.output.exists(_.name.startsWith("nbrs")) => e
+      }
+      assert(arrayBroadcasts.size === 1, s"$tile/$k: one broadcast of neighbor arrays per probe:\n$text")
     }
     CacheTracker.release(spark)
   }
