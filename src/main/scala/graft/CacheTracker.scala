@@ -74,18 +74,22 @@ object CacheTracker {
     tracked.forEach(e => if ((e._1 eq s) && (e._2 eq df)) seen = true)
     if (!seen) {
       tracked.add((s, df))
-      // plan-stats estimate (cheap, no action); clamp unknown/huge sentinels
-      val est = try {
-        val b = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        if (b.isValidLong && b.toLong > 0L && b.toLong < (1L << 50)) b.toLong else 0L
-      } catch { case _: Throwable => 0L }
-      if (est > 0L)
+      sizeEstimate(df).filter(_ > 0L).foreach(est =>
         bytesEst.computeIfAbsent(s,
-          _ => new java.util.concurrent.atomic.AtomicLong(0L)).addAndGet(est)
+          _ => new java.util.concurrent.atomic.AtomicLong(0L)).addAndGet(est))
       while (trackedCount(s) > maxTrackedPerSession) evictOldest(s)
     }
     persisted
   }
+
+  /** Catalyst's plan-stats size estimate of `df` in bytes (cheap, no action),
+    * or None for the unknown/huge sentinels. Guarded: a stats-computation
+    * failure must not abort a pipeline over a counter or a log line. */
+  private[graft] def sizeEstimate(df: DataFrame): Option[Long] =
+    try {
+      val b = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      if (b.isValidLong && b.toLong < (1L << 50)) Some(b.toLong) else None
+    } catch { case _: Throwable => None }
 
   /** Identity snapshot of the frames currently tracked for `spark`; pass to
     * [[releaseAddedSince]] to drop only what an enclosed pipeline stage added.

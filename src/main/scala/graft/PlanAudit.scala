@@ -4,12 +4,15 @@ package graft
   * shuffle counts, pushed filters, pruned schemas, and codegen spans can be reviewed
   * (and regressions spotted by diffing the output across changes).
   *
-  * Note (round-6 advice): `minhash_lsh_pairs` / `dedup_cluster_canonical_lsh` are
-  * EAGER at DataFrame-construction time — `Dedup.minhashLshPairs` materializes its
-  * persisted prep caches (`banded.count()`) so Catalyst plans the candidate joins
-  * from computed InMemoryRelation stats. Auditing those two queries therefore runs
-  * the full hash/signature/banding pipeline before printing, and leaves the two
-  * tracked persists in memory until the harness releases them. Accepted: the audit
+  * Note: the near-duplicate pair queries built on the band join
+  * (`graft.docs.Candidates.bandJoin`) are EAGER at DataFrame-construction time —
+  * the core persists and materializes the banded rows (one count) so Catalyst
+  * plans the candidate join from computed InMemoryRelation stats. Those are
+  * `minhash_lsh_pairs`, `simhash_neardup_pairs`, `embed_neardup_pairs_lsh`
+  * and their cluster users `dedup_cluster_canonical_lsh` and
+  * `embed_cluster_canonical`. Auditing them therefore runs the hash /
+  * signature / banding pipeline before printing, and leaves the tracked
+  * persists in memory until the harness releases them. Accepted: the audit
   * prints exactly the plan the bench executes, which is the contract here.
   *
   * Usage: `graft.PlanAudit [sfDir] [query ...]` — defaults to the Bench headline set.

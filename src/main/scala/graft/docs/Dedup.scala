@@ -8,12 +8,16 @@ import org.apache.spark.sql.functions._
   * group-by), exact n-gram Jaccard (the correctness anchor), MinHash+LSH (the 100 TB
   * scale path — candidate generation without the all-pairs join), and SimHash.
   *
-  * Scale notes: the exact Jaccard pair join explodes on common shingles — it is the
-  * small-scale oracle. At 100 TB the path is [[minhashLshPairs]]: per-document
-  * signatures (one map-side-combined shuffle keyed by (doc, perm)), banding, and a
-  * bucket equi-join that only pairs documents sharing a band — candidate count tracks
-  * true-duplicate count, not |docs|². Verified candidates then get the exact Jaccard
-  * on a join restricted to candidates.
+  * Each near-duplicate operator is its banding plus its exact score over the
+  * shared candidate core ([[Candidates]]): [[minhashLshPairs]] and
+  * [[simhashNearDupPairs]] band their signatures and self-join on (band,
+  * bucket) — candidate count tracks true-duplicate count, not |docs|²; the
+  * brute anchors [[ngramJaccardPairs]] and [[simhashNearDupPairsBrute]] take
+  * the core's all-pairs join. The exact Jaccard pair join explodes on common
+  * shingles — it is the small-scale oracle. At 100 TB the path is
+  * [[minhashLshPairs]]: per-document signatures (row-local over the cached hash
+  * sets), banding, and the bucket equi-join; verified candidates then get the
+  * exact Jaccard on a join restricted to candidates.
   *
   * Bucket skew: a band bucket with B members yields B(B−1)/2 candidates, and a
   * megabucket (boilerplate duplicated millions of times) is quadratic BY
@@ -91,25 +95,27 @@ object Dedup {
     graft.expr.SortedIntersectCount.register(docs.sparkSession)
     // [[TextOps.fanned]]: fan the text out only when the scan is under-split —
     // the row-local kernel otherwise inherits 1 task for a small single-file
-    // input, serializing the whole n² loop on one core. Persisted: both join
-    // sides read it — unpersisted, the text hashing runs twice (once in the
+    // input, serializing the whole n² loop on one core. The core persists the
+    // sets: unpersisted, the text hashing would run twice (once in the
     // broadcast build, once on the stream side)
-    val sets = graft.CacheTracker.persist(shingleSets(TextOps.fanned(docs), k)
-      .select(col("doc_id"), col("xs"), size(col("xs")).cast("long").as("n")))
-    val a = sets.select(col("doc_id").as("a"), col("xs").as("xa"), col("n").as("na"))
-    val b = sets.select(col("doc_id").as("b"), col("xs").as("xb"), col("n").as("nb"))
-    // explicit broadcast: the anchor's contract is oracle/test scale, where one
-    // side always fits (the scale path is minhashLshPairs) — without the hint
-    // the planner would fall back to a cartesian on the same pair loop
-    broadcast(a).join(b, col("a") < col("b"))
-      .select(col("a"), col("b"),
-        call_function(graft.expr.SortedIntersectCount.name, col("xa"), col("xb")).as("i"),
-        col("na"), col("nb"))
-      .where(col("i") > 0)
+    val sets = shingleSets(TextOps.fanned(docs), k).withColumnRenamed("doc_id", "id")
+    jaccardAtLeast(intersections(Candidates.allPairs(sets)).where(col("i") > 0), threshold)
+  }
+
+  /** (a, b, i, na, nb) for pairs carrying both sorted hash sets (xs_a, xs_b):
+    * the two-pointer intersection count and the set sizes. */
+  private def intersections(pairs: DataFrame): DataFrame =
+    pairs.select(col("a"), col("b"),
+      call_function(graft.expr.SortedIntersectCount.name, col("xs_a"), col("xs_b")).as("i"),
+      size(col("xs_a")).cast("long").as("na"), size(col("xs_b")).cast("long").as("nb"))
+
+  /** (a, b, jac) rounded to 6, kept at or above `threshold` — the one Jaccard
+    * verify of the anchor and the MinHash scale path. */
+  private def jaccardAtLeast(counted: DataFrame, threshold: Double): DataFrame =
+    counted
       .select(col("a"), col("b"),
         round(col("i") / (col("na") + col("nb") - col("i")), 6).as("jac"))
       .where(col("jac") >= threshold)
-  }
 
   /** The pre-round-7 pairs-sharing-a-shingle form of [[ngramJaccardPairs]] —
     * string join keys, co-occurrence count as the intersection. Kept as the
@@ -214,13 +220,22 @@ object Dedup {
       call_function(graft.expr.MinHashSig.name, col("xs"), lit(perms)).as("sig"))
   }
 
-  /** Rolling band hash over the band's `rows` signature values, seeded with the
-    * band index — plain codegen arithmetic, identical in DuckDB. Collisions can
-    * only ADD candidates (merged buckets), never lose them; the exact verify
-    * removes any such false positive in both engines identically. */
-  private def bandHash(b: Int, rows: Int): Column =
-    (0 until rows).foldLeft(lit(b.toLong): Column)((acc, r) =>
-      pmod(acc * lit(1000003L) + element_at(col("sig"), b * rows + r + 1), lit(minhashP)))
+  /** MinHash banding of per-doc hash sets (doc_id, xs): (id, band, bucket), one
+    * row per document and band. The bucket is a rolling hash over the band's
+    * `perms / bands` signature values, seeded with the band index — plain
+    * codegen arithmetic, identical in DuckDB. Collisions can only ADD
+    * candidates (merged buckets), never lose them; the exact verify removes
+    * any such false positive in both engines identically. */
+  private[graft] def minhashBands(sets: DataFrame, perms: Int, bands: Int): DataFrame = {
+    require(perms % bands == 0, "bands must divide perms")
+    val rows = perms / bands
+    def bandHash(b: Int): Column =
+      (0 until rows).foldLeft(lit(b.toLong): Column)((acc, r) =>
+        pmod(acc * lit(1000003L) + element_at(col("sig"), b * rows + r + 1), lit(minhashP)))
+    signaturesFromSets(sets, perms)
+      .select(col("doc_id"), posexplode(array((0 until bands).map(bandHash): _*)))
+      .select(col("doc_id").as("id"), col("pos").as("band"), col("col").as("bucket"))
+  }
 
   /** LSH candidate pairs from banded MinHash signatures, verified with exact
     * Jaccard. Output (a, b, jac) with jac ≥ `threshold` — same shape as
@@ -230,10 +245,12 @@ object Dedup {
     * Scale shape: ONE pass over the text builds the persisted per-doc hash
     * sets ([[shingleSets]] — row-local compiled kernel, no exchange); the
     * signatures are row-local minima over the CACHED arrays
-    * ([[graft.expr.MinHashSig]] — no exchange either); banding + bucket
-    * equi-join yields candidates proportional to true-duplicate density — the
-    * FIRST shuffle of the whole plan; verification intersects the two per-doc
-    * SORTED hash arrays with the codegen'd two-pointer merge
+    * ([[graft.expr.MinHashSig]] — no exchange either); [[minhashBands]] +
+    * [[Candidates.bandJoin]] yield candidates proportional to true-duplicate
+    * density — the FIRST shuffle of the whole plan; the distinct candidates
+    * get both sorted hash arrays joined back ([[Candidates.withSides]]; the
+    * arrays are too large to carry through the band join once per band) and
+    * are verified with the codegen'd two-pointer merge
     * ([[graft.expr.SortedIntersectCount]]). Every stage is codegen'd — the
     * portable hashes also make the whole pipeline DuckDB-oracle-checkable
     * (round 2's last closable no-oracle row).
@@ -257,25 +274,14 @@ object Dedup {
       perms: Int = 64,
       bands: Int = 16,
       threshold: Double = 0.35): DataFrame = {
-    require(perms % bands == 0, "bands must divide perms")
-    val rows = perms / bands
     graft.expr.SortedIntersectCount.register(docs.sparkSession)
     // ONE map-side pass hashes the text into per-doc sorted sets (the compiled
     // row-local kernel); signatures are row-local minima over the CACHED
     // arrays — neither stage shuffles, and the text is never touched again.
-    // Both tracked persists are explicitly MEMORY_AND_DISK with their size
-    // estimates logged (round-4 verdict #6): under host memory pressure the
-    // contract is spill-to-disk, never silent recompute of the text scan —
-    // and the persisted volume is observable when a bench run degrades.
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def estMb(df: DataFrame): String =
-      // guarded like CacheTracker's identical stats access (round-5 advice): a
-      // stats-computation failure must not abort the pipeline over a log line
-      try {
-        val b = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        if (b.isValidLong && b.toLong < (1L << 50)) f"${b.toLong / 1048576.0}%.1f MiB est" else "unknown"
-      } catch { case _: Throwable => "unknown" }
-    // fan the TEXT out to the session's shuffle width ONCE, before hashing — but
+    // The sets persist is explicitly MEMORY_AND_DISK like the core's (round-4
+    // verdict #6), and both persisted sizes are logged: the persisted volume
+    // is observable when a bench run degrades.
+    // Fan the TEXT out to the session's shuffle width ONCE, before hashing — but
     // ONLY when the scan is under-split ([[TextOps.fanned]]): the
     // row-local kernels removed both prep exchanges, so parallelism would
     // otherwise equal the SCAN's split count — 1 for a small single-file input,
@@ -285,48 +291,23 @@ object Dedup {
     // spark.sql.shuffle.partitions would both pay a corpus-sized text shuffle
     // AND collapse parallelism whenever the scan's split count exceeds that
     // setting (the normal case at the 100 TB design point) — round-6 advice.
-    val sets = graft.CacheTracker.persist(shingleSets(TextOps.fanned(docs), k), level)
-    // persisted: BOTH sides of the candidate self-join read it — unpersisted,
-    // the whole signature computation would run twice inside that job
-    val banded = graft.CacheTracker.persist(signaturesFromSets(sets, perms)
-      .select(col("doc_id"), posexplode(array((0 until bands).map(bandHash(_, rows)): _*)))
-      .select(col("doc_id"), col("pos").as("band"), col("col").as("bh")), level)
-    // MATERIALIZE both caches before the join query is BUILT: the row-local
-    // prep leaves pre-materialization size estimates at the scan-derived guess,
-    // which undercounts the generated arrays by ~8 bytes/char — Catalyst
-    // planning the joins from that guess could pick a broadcast build whose
-    // ACTUAL size is far past the threshold (the round-5 auto-select lesson:
-    // an under-estimated broadcast aborts on maxResultSize at scale). Planned
-    // AFTER materialization, every join side is an InMemoryRelation carrying
-    // its COMPUTED size, so the broadcast-vs-merge choice is made on truth at
-    // any scale: these 8 MiB caches broadcast (fastest here), corpus-scale
-    // caches exceed the threshold and take the shuffled sort-merge on the
-    // compact numeric keys. No hints — the stats are the contract.
-    banded.count()
-    // log AFTER the materializing count so the estimates read the COMPUTED
-    // InMemoryRelation sizes, not the scan-derived guess the adjacent comment
-    // calls an undercount (round-6 advice: the pre-count log printed "0.0 MiB
-    // est" in test runs, defeating the observability contract it cites).
+    val sets = graft.CacheTracker.persist(shingleSets(TextOps.fanned(docs), k),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val banded = minhashBands(sets, perms, bands)
+    val candidates = Candidates.bandJoin(banded).distinct()
+    // logged AFTER the core's materializing count, so the estimates read the
+    // COMPUTED InMemoryRelation sizes, not the scan-derived guess (round-6
+    // advice: a pre-count log printed "0.0 MiB est" in test runs).
     // `.select("*")` builds a FRESH QueryExecution: the handles' own memoized
     // plans were forced pre-materialization (inside CacheTracker.persist) and
     // would keep reporting the stale guess.
+    def estMb(df: DataFrame): String =
+      graft.CacheTracker.sizeEstimate(df.select(col("*")))
+        .fold("unknown")(b => f"${b / 1048576.0}%.1f MiB est")
     System.err.println(
-      s"[minhash] persisted (MEMORY_AND_DISK): " +
-        s"sets ${estMb(sets.select(col("*")))}, banded ${estMb(banded.select(col("*")))}")
-    val candidates = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    candidates
-      .join(sets.select(col("doc_id").as("a"), col("xs").as("xa")), "a")
-      .join(sets.select(col("doc_id").as("b"), col("xs").as("xb")), "b")
-      .select(col("a"), col("b"),
-        call_function(graft.expr.SortedIntersectCount.name, col("xa"), col("xb")).as("i"),
-        size(col("xa")).cast("long").as("na"), size(col("xb")).cast("long").as("nb"))
-      .select(col("a"), col("b"),
-        round(col("i") / (col("na") + col("nb") - col("i")), 6).as("jac"))
-      .where(col("jac") >= threshold)
+      s"[minhash] persisted (MEMORY_AND_DISK): sets ${estMb(sets)}, banded ${estMb(banded)}")
+    jaccardAtLeast(intersections(
+      Candidates.withSides(candidates, sets.withColumnRenamed("doc_id", "id"))), threshold)
   }
 
   /** 64-bit SimHash over whitespace tokens (unit weights): per-bit ±1 votes summed
@@ -372,47 +353,48 @@ object Dedup {
         .as("simhash"))
   }
 
-  /** SimHash near-duplicate pairs with hamming distance ≤ `maxHamming`, WITHOUT the
-    * all-pairs join (round 1's scale-killer): pigeonhole banding. Split the 64 bits
-    * into `maxHamming + 1` bands — two hashes within hamming `maxHamming` differ in
-    * at most `maxHamming` bands, so at least one band is bit-identical; an equi-join
-    * on (band, band_bits) yields every qualifying pair as a candidate, then the
-    * exact hamming filter verifies. Candidate volume tracks near-duplicate density
-    * (band-bucket sizes), never |docs|². Output (a, b, hamming), a < b — identical
-    * rows to the brute-force form by construction (banding is lossless here). */
-  def simhashNearDupPairs(docs: DataFrame, maxHamming: Int = 8): DataFrame = {
+  /** SimHash pigeonhole banding: (id, band, bucket, h), one row per document and
+    * band. The 64 bits split into `maxHamming + 1` contiguous bands, the first
+    * `64 % nBands` one bit wider; a bucket is the band's bit value. */
+  private[graft] def simhashBands(docs: DataFrame, maxHamming: Int): DataFrame = {
     val nBands = maxHamming + 1
     val base = 64 / nBands
     val widths = Seq.tabulate(nBands)(j => if (j < 64 % nBands) base + 1 else base)
     val lows = widths.scanLeft(0)(_ + _).init
-    val h = graft.CacheTracker.persist(simhash(docs)) // both sides of the candidate self-join
     val bandCols = (0 until nBands).map { j =>
       // mask after the arithmetic shift → exact logical band extraction, sign-safe
       struct(lit(j).as("band"),
-        shiftright(col("simhash"), lows(j)).bitwiseAND(lit((1L << widths(j)) - 1)).as("bv"))
+        shiftright(col("simhash"), lows(j)).bitwiseAND(lit((1L << widths(j)) - 1)).as("bucket"))
     }
-    val banded = h.select(col("doc_id"), col("simhash").as("h"),
+    simhash(docs).select(col("doc_id").as("id"), col("simhash").as("h"),
         explode(array(bandCols: _*)).as("e"))
-      .select(col("doc_id"), col("h"), col("e.band").as("band"), col("e.bv").as("bv"))
-    banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-        hamming64(col("x.h"), col("y.h")).cast("long").as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
+      .select(col("id"), col("e.band").as("band"), col("e.bucket").as("bucket"), col("h"))
   }
+
+  /** SimHash near-duplicate pairs with hamming distance ≤ `maxHamming`, WITHOUT the
+    * all-pairs join (round 1's scale-killer): pigeonhole banding. Split the 64 bits
+    * into `maxHamming + 1` bands — two hashes within hamming `maxHamming` differ in
+    * at most `maxHamming` bands, so at least one band is bit-identical; the band
+    * join ([[Candidates.bandJoin]], carrying each side's hash) yields every
+    * qualifying pair as a candidate, the exact hamming filter verifies, and
+    * `distinct` runs last, on the verified pairs only. Candidate volume tracks
+    * near-duplicate density (band-bucket sizes), never |docs|². Output
+    * (a, b, hamming), a < b — identical rows to the brute-force form by
+    * construction (banding is lossless here). */
+  def simhashNearDupPairs(docs: DataFrame, maxHamming: Int = 8): DataFrame =
+    withinHamming(Candidates.bandJoin(simhashBands(docs, maxHamming), "h"), maxHamming)
+      .distinct()
 
   /** Brute-force twin of [[simhashNearDupPairs]] — the O(n²) correctness anchor,
     * for differential tests only (never registered as a scale path). */
-  private[graft] def simhashNearDupPairsBrute(docs: DataFrame, maxHamming: Int = 8): DataFrame = {
-    val h = graft.CacheTracker.persist(simhash(docs))
-    val a = h.select(col("doc_id").as("a"), col("simhash").as("ha"))
-    val b = h.select(col("doc_id").as("b"), col("simhash").as("hb"))
-    a.join(b, col("a") < col("b"))
-      .select(col("a"), col("b"), hamming64(col("ha"), col("hb")).cast("long").as("hamming"))
+  private[graft] def simhashNearDupPairsBrute(docs: DataFrame, maxHamming: Int = 8): DataFrame =
+    withinHamming(Candidates.allPairs(
+      simhash(docs).select(col("doc_id").as("id"), col("simhash").as("h"))), maxHamming)
+
+  /** (a, b, hamming) of pairs carrying both hashes (h_a, h_b), kept within `maxHamming`. */
+  private def withinHamming(pairs: DataFrame, maxHamming: Int): DataFrame =
+    pairs.select(col("a"), col("b"), hamming64(col("h_a"), col("h_b")).cast("long").as("hamming"))
       .where(col("hamming") <= maxHamming)
-  }
 
   /** Hamming distance between two 64-bit fingerprints (for near-dup query on
     * simhashes). */

@@ -19,6 +19,13 @@ import graft.expr.{DotProduct, HyperplaneBands}
   * hyperplanes; only vectors sharing a bucket are compared. At 100 TB the bucket
   * equi-join replaces the query×corpus cross join; recall is tunable via `planes`
   * (fewer bits → bigger buckets → higher recall, more compute).
+  *
+  * The near-duplicate pair operators share the family's candidate core
+  * ([[Candidates]]): [[lshNearDupPairs]] bands the vectors into OR-amplified
+  * hyperplane buckets and self-joins on (band, bucket); its anchor
+  * [[cosineNearDupPairs]] takes the core's all-pairs join. Every operator
+  * scores with the one rounded [[cosine]], and the three top-k operators end
+  * in the one [[topK]] window.
   */
 object Similarity {
 
@@ -37,6 +44,29 @@ object Similarity {
   private def dot(a: Column, b: Column): Column =
     call_function(DotProduct.name, a, b)
 
+  /** Cosine of vectors `x`, `y` with norms `nx`, `ny`, rounded to 6 — the one
+    * score of every operator here. */
+  private def cosine(x: Column, y: Column, nx: Column, ny: Column): Column =
+    round(dot(x, y) / (nx * ny), 6)
+
+  /** The k best neighbors of each query in `scored` (q_id, nbr_id, score):
+    * (q_id, nbr_id, score, rnk) with rnk 1..k by (score desc, nbr_id asc). */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("nbr_id").asc)
+    scored
+      .withColumn("rnk", row_number().over(w))
+      .where(col("rnk") <= k)
+      .select(col("q_id"), col("nbr_id"), col("score"), col("rnk").cast("long").as("rnk"))
+  }
+
+  /** (a, b, score) of pairs carrying both vectors and norms, kept at or above
+    * `threshold`. */
+  private def cosineAtLeast(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs
+      .select(col("a"), col("b"),
+        cosine(col("emb_a"), col("emb_b"), col("nrm_a"), col("nrm_b")).as("score"))
+      .where(col("score") >= threshold)
+
   /** Exact cosine top-k for every query vector (`vec_id % queryMod == 0`), self
     * excluded. Output (q_id, nbr_id, score, rnk), score rounded to 6, rnk 1..k with
     * deterministic (score desc, nbr_id asc) tie-break. */
@@ -47,14 +77,9 @@ object Similarity {
     val n = graft.CacheTracker.persist(normed(embeddings))
     val q = n.select(col("vec_id").as("q_id"), col("emb").as("qe"), col("nrm").as("qn"))
       .where(pmod(col("q_id"), lit(queryMod)) === 0)
-    val scored = broadcast(q).join(n, col("vec_id") =!= col("q_id"))
+    topK(broadcast(q).join(n, col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("nbr_id"),
-        round(dot(col("qe"), col("emb")) / (col("qn") * col("nrm")), 6).as("score"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("nbr_id").asc)
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select(col("q_id"), col("nbr_id"), col("score"), col("rnk").cast("long").as("rnk"))
+        cosine(col("qe"), col("emb"), col("qn"), col("nrm")).as("score")), k)
   }
 
   /** All band signatures in one compiled [[graft.expr.HyperplaneBands]] kernel —
@@ -69,18 +94,14 @@ object Similarity {
     call_function(HyperplaneBands.name, col(embName), lit(dim), lit(planes), lit(bands))
 
   /** Embedding-cosine near-duplicate pairs: all (a < b) with cosine ≥ `threshold`.
-    * Brute-force form (exact, oracle-checkable); at scale, bucket first with
-    * [[lshCosineTopK]]'s hyperplane signature and verify within buckets — same
-    * two-tier pattern as [[graft.docs.Dedup.minhashLshPairs]]. */
+    * Brute-force form (exact, oracle-checkable) over the core's all-pairs join
+    * ([[Candidates.allPairs]]); at scale, [[lshNearDupPairs]] buckets first and
+    * verifies within buckets — same two-tier pattern as
+    * [[graft.docs.Dedup.minhashLshPairs]]. */
   def cosineNearDupPairs(embeddings: DataFrame, threshold: Double): DataFrame = {
     DotProduct.register(embeddings.sparkSession)
-    val n = normed(embeddings)
-    val a = n.select(col("vec_id").as("a"), col("emb").as("ea"), col("nrm").as("na"))
-    val b = n.select(col("vec_id").as("b"), col("emb").as("eb"), col("nrm").as("nb"))
-    a.join(b, col("a") < col("b"))
-      .select(col("a"), col("b"),
-        round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6).as("score"))
-      .where(col("score") >= threshold)
+    cosineAtLeast(Candidates.allPairs(normed(embeddings).withColumnRenamed("vec_id", "id")),
+      threshold)
   }
 
   /** Approximate cosine near-duplicate pairs WITHOUT the all-pairs join — the
@@ -95,7 +116,11 @@ object Similarity {
     * prune superlinearly (SimilaritySpec shows 100% recall at 0.9); the driver
     * corpus's threshold 0.4 sits just above its cosine noise floor (q99.9 ≈ 0.38),
     * the adversarial regime for any LSH — (5, 40) measures 1.000 recall there (59/59 at sf0.01, asserted >= 0.9 in SimilaritySpec).
-    * Output (a, b, score) — a subset of the brute form's rows, never a superset. */
+    * Output (a, b, score) — a subset of the brute form's rows, never a superset.
+    *
+    * Candidates come from [[Candidates.bandJoin]]; the distinct pairs get both
+    * vectors joined back ([[Candidates.withSides]]) — a vector is too large to
+    * carry through the band join once per band. */
   def lshNearDupPairs(
       embeddings: DataFrame,
       dim: Int,
@@ -104,21 +129,11 @@ object Similarity {
       bands: Int = 40): DataFrame = {
     DotProduct.register(embeddings.sparkSession)
     HyperplaneBands.register(embeddings.sparkSession)
-    val n = graft.CacheTracker.persist(normed(embeddings)) // banding pass + both verify sides
-    val banded = n.select(col("vec_id"),
-        posexplode(bandSignatures("emb", dim, planes, bands)))
-      .select(col("vec_id"), col("pos").as("band"), col("col").as("bv"))
-    val cands = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
-          col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"))
-      .distinct()
-    cands
-      .join(n.select(col("vec_id").as("a"), col("emb").as("ea"), col("nrm").as("na")), "a")
-      .join(n.select(col("vec_id").as("b"), col("emb").as("eb"), col("nrm").as("nb")), "b")
-      .select(col("a"), col("b"),
-        round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6).as("score"))
-      .where(col("score") >= threshold)
+    // banding pass + both verify sides
+    val n = graft.CacheTracker.persist(normed(embeddings).withColumnRenamed("vec_id", "id"))
+    val banded = n.select(col("id"), posexplode(bandSignatures("emb", dim, planes, bands)))
+      .select(col("id"), col("pos").as("band"), col("col").as("bucket"))
+    cosineAtLeast(Candidates.withSides(Candidates.bandJoin(banded).distinct(), n), threshold)
   }
 
   /** IVF (inverted-file) approximate cosine top-k — the data-adaptive scale path
@@ -168,15 +183,10 @@ object Similarity {
       .withColumn("rn", row_number().over(wProbe))
       .where(col("rn") <= nProbe)
       .select(col("q_id"), col("qe"), col("qn"), col("c_id"))
-    val scored = probed.join(assigned, "c_id")
+    topK(probed.join(assigned, "c_id")
       .where(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("nbr_id"),
-        round(dot(col("qe"), col("emb")) / (col("qn") * col("nrm")), 6).as("score"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("nbr_id").asc)
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select(col("q_id"), col("nbr_id"), col("score"), col("rnk").cast("long").as("rnk"))
+        cosine(col("qe"), col("emb"), col("qn"), col("nrm")).as("score")), k)
   }
 
   /** Approximate cosine top-k via hyperplane buckets. Same output shape as
@@ -194,14 +204,9 @@ object Similarity {
     val q = n.select(col("vec_id").as("q_id"), col("emb").as("qe"),
         col("nrm").as("qn"), col("bucket"))
       .where(pmod(col("q_id"), lit(queryMod)) === 0)
-    val scored = q.join(n, Seq("bucket"))
+    topK(q.join(n, Seq("bucket"))
       .where(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("nbr_id"),
-        round(dot(col("qe"), col("emb")) / (col("qn") * col("nrm")), 6).as("score"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("nbr_id").asc)
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select(col("q_id"), col("nbr_id"), col("score"), col("rnk").cast("long").as("rnk"))
+        cosine(col("qe"), col("emb"), col("qn"), col("nrm")).as("score")), k)
   }
 }

@@ -231,6 +231,41 @@ class DedupSpec extends AnyFunSuite {
       "pigeonhole banding must plan as an equi-join, not an all-pairs product")
   }
 
+  test("near-dup pair operators emit each pair once, a < b — spec corpora and sf0.01") {
+    // every banded operator must dedupe the pairs its band join repeats once
+    // per shared band, and every anchor must emit each unordered pair once;
+    // the other near-dup tests compare .toSet/.toMap, which a repeated row passes
+    val toy = Seq(
+      (0L, Array(1.0f, 0.0f, 0.0f, 0.0f)), (7L, Array(0.99f, 0.1f, 0.0f, 0.0f)),
+      (13L, Array(0.7f, 0.7f, 0.0f, 0.0f)), (50L, Array(0.0f, 0.0f, 1.0f, 0.0f)),
+      (99L, Array(0.0f, 0.0f, 0.0f, -1.0f))).toDF("vec_id", "embedding")
+    val sf = "/root/testdata/sf0.01"
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val cases = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "minhashLshPairs spec" -> (() => Dedup.minhashLshPairs(docsDF, k = 5, threshold = 0.3)),
+      "ngramJaccardPairs spec" -> (() => Dedup.ngramJaccardPairs(docsDF, k = 5, threshold = 0.3)),
+      "simhashNearDupPairs spec" -> (() => Dedup.simhashNearDupPairs(docsDF, maxHamming = 24)),
+      "simhashNearDupPairsBrute spec" -> (() => Dedup.simhashNearDupPairsBrute(docsDF, maxHamming = 24)),
+      "lshNearDupPairs spec" -> (() =>
+        Similarity.lshNearDupPairs(toy, dim = 4, threshold = 0.5, planes = 2, bands = 8)),
+      "cosineNearDupPairs spec" -> (() => Similarity.cosineNearDupPairs(toy, threshold = 0.5)),
+      "minhashLshPairs sf0.01" -> (() => Dedup.minhashLshPairs(docs, k = 5, threshold = 0.35)),
+      "ngramJaccardPairs sf0.01" -> (() => Dedup.ngramJaccardPairs(docs, k = 5, threshold = 0.35)),
+      "simhashNearDupPairs sf0.01" -> (() => Dedup.simhashNearDupPairs(docs, maxHamming = 8)),
+      "simhashNearDupPairsBrute sf0.01" -> (() => Dedup.simhashNearDupPairsBrute(docs, maxHamming = 8)),
+      "lshNearDupPairs sf0.01" -> (() =>
+        Similarity.lshNearDupPairs(emb, dim = 64, threshold = 0.4, planes = 5, bands = 40)),
+      "cosineNearDupPairs sf0.01" -> (() => Similarity.cosineNearDupPairs(emb, threshold = 0.4)))
+    for ((name, op) <- cases) {
+      val pairs = op().collect().map(r => (r.getLong(0), r.getLong(1)))
+      CacheTracker.release(spark)
+      assert(pairs.nonEmpty, s"$name: no pairs — the check below would be vacuous")
+      assert(pairs.forall { case (a, b) => a < b }, s"$name: a row with a >= b")
+      assert(pairs.length === pairs.distinct.length, s"$name: repeated (a, b) rows")
+    }
+  }
+
   test("simhash: identical docs equal, near-identical close, unrelated far (hamming)") {
     val hs = Dedup.simhash(docsDF).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
