@@ -20,6 +20,11 @@ import org.apache.spark.storage.StorageLevel
   * discipline with (min, +1) in place of (sum, ·damping/deg). Unreached
   * vertices carry no row (a frontier that hasn't arrived is absence, not a
   * sentinel — no ∞ constant to overflow or leak).
+  *
+  * One loop ([[frontierRounds]]) serves both entry points: it takes key
+  * columns, as the PageRank loop does — no key is one multi-source search
+  * ([[distances]]), the source column `s` is one search per source
+  * ([[distancesPerSource]], behind [[harmonicCentrality]]).
   */
 object Bfs {
 
@@ -28,76 +33,60 @@ object Bfs {
     * [[PageRank.personalizedFixedIterations]], and for the same reason: no
     * per-round vertex join). Output (v, dist) for vertices reached within
     * `rounds` hops; on a connected graph with rounds ≥ diameter this is every
-    * vertex.
-    *
-    * Frontier-delta form: in unweighted BFS a settled distance never improves,
-    * so only the vertices settled LAST round propagate — round r probes the
-    * edges incident to the frontier (AQE broadcasts the small frontier into
-    * the pre-partitioned edge table), dedups the reached set map-side, and
-    * anti-joins the vertex-sized settled table. Total aggregated rows across
-    * ALL rounds ≈ m, versus m·rounds for the naive re-relax-everything
-    * min-plus (which this replaced: measured 0.67 N→4N efficiency from paying
-    * a full-edge aggregate per round; each edge now shuffles at most once,
-    * when its source enters the frontier). */
+    * vertex. [[frontierRounds]] with no key: one BFS from the whole set. */
   def distances(
       canonical: DataFrame,
       isSource: Column => Column,
-      rounds: Int): DataFrame = {
-    require(rounds >= 0, "rounds must be non-negative")
-    val sym = GraphCore.symmetric(canonical)
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var settled = GraphCore.vertices(canonical)
-      .where(isSource(col("v")))
-      .select(col("v"), lit(0L).as("dist"))
-      .localCheckpoint(false)
-    var frontier = settled
-    for (r <- 1 to rounds) {
-      val next = sym
-        .join(frontier.select(col("v").as("src")), "src")
-        .select(col("dst").as("v"))
-        .distinct()
-        .join(settled.select("v"), Seq("v"), "left_anti")
-        .select(col("v"), lit(r.toLong).as("dist"))
-        .localCheckpoint(false)
-      // plain union of the per-round CACHED frontiers (round-7): checkpointing
-      // the union re-cached the whole growing settled set every round —
-      // O(n·rounds) duplicate cache writes; the union of cached frames costs
-      // nothing to re-read and its lineage depth is bounded by the round budget
-      settled = settled.unionAll(next)
-      frontier = next
-    }
-    sym.unpersist()
-    settled
-  }
+      rounds: Int): DataFrame =
+    frontierRounds(canonical, Nil,
+      GraphCore.vertices(canonical).where(isSource(col("v"))), rounds)
 
-  /** Per-source hop distances: the same frontier-delta rounds keyed by the
-    * source vertex `s`, so each source's BFS runs independently in one shared
-    * loop (the keyed-kernel pattern of `PageRank.fixedIterationsKeyed`).
-    * Output (s, v, dist) for pairs within `rounds` hops. The frontier/settled
+  /** Per-source hop distances: [[frontierRounds]] keyed by the source vertex
+    * `s`, so each source's BFS runs independently in one shared loop (the
+    * keyed-kernel pattern of `PageRank.fixedIterationsKeyed`). Output
+    * (s, v, dist) for pairs within `rounds` hops. The frontier/settled
     * tables are (source × reached)-sized — at 100 TB you SAMPLE sources (the
     * standard estimator for centralities; `isSource` is that sample predicate)
     * rather than run all-pairs. */
   def distancesPerSource(
       canonical: DataFrame,
       isSource: Column => Column,
+      rounds: Int): DataFrame =
+    frontierRounds(canonical, Seq("s"),
+      GraphCore.vertices(canonical).where(isSource(col("v"))).select(col("v").as("s"), col("v")),
+      rounds)
+
+  /** The BFS loop: one independent search per key value (none: one search),
+    * from the seed rows (keys…, v) at distance 0. Output (keys…, v, dist).
+    *
+    * Frontier-delta form: in unweighted BFS a settled distance never improves,
+    * so only the vertices settled LAST round propagate — round r probes the
+    * edges incident to the frontier (AQE broadcasts the small frontier into
+    * the pre-partitioned edge table), dedups the reached set map-side, and
+    * anti-joins the settled table on (keys…, v). Total aggregated rows across
+    * ALL rounds ≈ m per key, versus m·rounds for the naive re-relax-everything
+    * min-plus (which this replaced: measured 0.67 N→4N efficiency from paying
+    * a full-edge aggregate per round; each edge now shuffles at most once per
+    * key, when its source enters that key's frontier). */
+  private def frontierRounds(
+      canonical: DataFrame,
+      keys: Seq[String],
+      seeds: DataFrame,
       rounds: Int): DataFrame = {
     require(rounds >= 0, "rounds must be non-negative")
+    val kc = keys.map(col)
     val sym = GraphCore.symmetric(canonical)
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var settled = GraphCore.vertices(canonical)
-      .where(isSource(col("v")))
-      .select(col("v").as("s"), col("v"), lit(0L).as("dist"))
-      .localCheckpoint(false)
+    var settled = seeds.select(kc :+ col("v") :+ lit(0L).as("dist"): _*).localCheckpoint(false)
     var frontier = settled
     for (r <- 1 to rounds) {
       val next = sym
-        .join(frontier.select(col("s"), col("v").as("src")), "src")
-        .select(col("s"), col("dst").as("v"))
+        .join(frontier.select(kc :+ col("v").as("src"): _*), "src")
+        .select(kc :+ col("dst").as("v"): _*)
         .distinct()
-        .join(settled.select("s", "v"), Seq("s", "v"), "left_anti")
-        .select(col("s"), col("v"), lit(r.toLong).as("dist"))
+        .join(settled.select(kc :+ col("v"): _*), keys :+ "v", "left_anti")
+        .select(kc :+ col("v") :+ lit(r.toLong).as("dist"): _*)
         .localCheckpoint(false)
       // plain union of the per-round CACHED frontiers (round-7): checkpointing
       // the union re-cached the whole growing settled set every round —

@@ -42,16 +42,9 @@ object Bipartite {
     * incidence table; wedges run through the SECOND column (the middle side).
     * Output: one row (butterflies: long). */
   def butterflyCount(membership: DataFrame): DataFrame = {
-    val Array(leftCol, midCol) = membership.columns
-    val l = membership.select(col(leftCol).as("a"), col(midCol).as("z"))
-    val r = membership.select(col(leftCol).as("b"), col(midCol).as("z"))
-    val cn = l.join(r, "z")
-      .where(col("a") < col("b"))
-      .groupBy("a", "b")
-      .agg(count(lit(1)).as("cn"))
     // Σ cn·(cn−1) is even by construction; integral div keeps the count exact
     // past 2^53 where a double division would silently round
-    cn.agg(coalesce(sum(col("cn") * (col("cn") - lit(1L))), lit(0L)).as("s"))
+    coMembership(membership).agg(coalesce(sum(col("cn") * (col("cn") - lit(1L))), lit(0L)).as("s"))
       .select(call_function("div", col("s"), lit(2L)).as("butterflies"))
   }
 
@@ -60,24 +53,30 @@ object Bipartite {
     * C(cn, 2), credited to both endpoints (the per-vertex triangle-count
     * analog). Output (v, butterflies), vertices in no butterfly keep a 0 row. */
   def butterflyPerVertex(membership: DataFrame): DataFrame = {
-    val Array(leftCol, midCol) = membership.columns
-    val l = membership.select(col(leftCol).as("a"), col(midCol).as("z"))
-    val r = membership.select(col(leftCol).as("b"), col(midCol).as("z"))
-    val cn = l.join(r, "z")
-      .where(col("a") < col("b"))
-      .groupBy("a", "b")
-      .agg(count(lit(1)).as("cn"))
     // ONE explode pass instead of a 2-way unionAll of (a)/(b) selects: the
     // union form replicated the unpersisted wedge join+aggregation subtree
     // into both branches, executing it twice per query (the round-7
     // triangles_per_vertex finding, same fix — identical rows)
-    val credits = cn
+    val credits = coMembership(membership)
       .select(explode(array(col("a"), col("b"))).as("v"),
         (col("cn") * (col("cn") - lit(1L))).as("c2"))
       .groupBy("v")
       .agg(call_function("div", sum(col("c2")), lit(2L)).as("butterflies"))
-    membership.select(col(leftCol).as("v")).distinct()
+    membership.select(col(membership.columns.head).as("v")).distinct()
       .join(credits, Seq("v"), "left")
       .select(col("v"), coalesce(col("butterflies"), lit(0L)).as("butterflies"))
+  }
+
+  /** Co-membership pairs: (a, b, cn) for every pair a < b of first-column
+    * vertices sharing cn ≥ 1 second-column (middle) vertices — the wedge join
+    * on the middle vertex and one map-side-combinable count per pair. */
+  private def coMembership(membership: DataFrame): DataFrame = {
+    val Array(leftCol, midCol) = membership.columns
+    val l = membership.select(col(leftCol).as("a"), col(midCol).as("z"))
+    val r = membership.select(col(leftCol).as("b"), col(midCol).as("z"))
+    l.join(r, "z")
+      .where(col("a") < col("b"))
+      .groupBy("a", "b")
+      .agg(count(lit(1)).as("cn"))
   }
 }

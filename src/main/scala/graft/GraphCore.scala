@@ -19,6 +19,13 @@ import org.apache.spark.sql.functions._
   *   - CSR adjacency build + per-segment sort (TrCountingGraph.cpp:328-363, :276-281)
   *     → `groupBy(src).agg(sort_array(collect_list(dst)))`
   *
+  * One pair canonicalization ([[canonicalPairs]]: drop nulls and self-loops,
+  * order each pair as (least, greatest), key columns carried in front) feeds
+  * [[clean]] (`distinct`), [[cleanWeighted]] (`count as w`) and the per-day
+  * edges ([[Ingest.edgesFromEventsDaily]], `distinct` over (day, src, dst)).
+  * One fixpoint loop ([[peel]]) serves the k-core here and the k-truss in
+  * [[TriangleCount.ktrussEdges]]; only the drop rule differs.
+  *
   * Scale notes (100 TB / 1000-executor design):
   *   - `clean` is one shuffle (the `distinct`); canonicalization happens map-side so
   *     the dedup shuffle also co-locates both directions of each undirected edge.
@@ -36,12 +43,7 @@ object GraphCore {
   /** Arbitrary (src, dst) pair table → canonical undirected simple edges with
     * `src < dst`: self-loops dropped, nulls dropped, multi-edges deduplicated. */
   def clean(pairs: DataFrame): DataFrame =
-    pairs
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .select(
-        least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .distinct()
+    canonicalPairs(pairs).distinct()
 
   /** Weighted twin of [[clean]]: arbitrary (src, dst) pair table → canonical
     * undirected edges with co-occurrence multiplicity — (src, dst, w) where w
@@ -50,13 +52,18 @@ object GraphCore {
     * as the natural edge weight for weighted kernels. Same single shuffle
     * (the groupBy, map-side combined, canonicalized map-side). */
   def cleanWeighted(pairs: DataFrame): DataFrame =
+    canonicalPairs(pairs).groupBy("src", "dst").agg(count(lit(1)).as("w"))
+
+  /** The map-side half of [[clean]] and [[cleanWeighted]] (and of the per-day
+    * edges, [[Ingest.edgesFromEventsDaily]]): a (keys…, src, dst) pair table
+    * without null ends or self-loops, each pair as (keys…, least, greatest).
+    * Callers finish it with their own dedup or count over (keys…, src, dst). */
+  private[graft] def canonicalPairs(pairs: DataFrame, keys: String*): DataFrame =
     pairs
       .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .select(
-        least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .groupBy("src", "dst")
-      .agg(count(lit(1)).as("w"))
+      .select(keys.map(col) :+
+        least(col("src"), col("dst")).as("src") :+
+        greatest(col("src"), col("dst")).as("dst"): _*)
 
   /** Exact per-vertex degree of the canonical undirected edge set.
     * One row per vertex: (v, deg). */
@@ -164,9 +171,9 @@ object GraphCore {
     * fixpoint or the round budget. Peeling a fixpoint removes nothing, so a
     * converged graph yields identical rows under any larger budget — the same
     * idempotence that lets the registered query pin a finite budget and still be
-    * expressible as unrolled non-recursive oracle SQL (the
-    * [[TriangleCount.ktrussEdges]] pattern; k-core is its degree-only sibling —
-    * truss peels on triangle support, core peels on degree).
+    * expressible as unrolled non-recursive oracle SQL. This is [[peel]] with
+    * the below-k degree drop rule; [[TriangleCount.ktrussEdges]] is the same
+    * loop on triangle support.
     *
     * Scale shape per round: one map-side-combined degree aggregation (shuffle
     * carries (vertex, partition) partials, not edges) + two anti-joins of the
@@ -179,24 +186,43 @@ object GraphCore {
     * peels, a well-defined semantics of its own. */
   def kcoreEdges(canonical: DataFrame, k: Int, maxRounds: Int = 100): DataFrame = {
     require(k >= 1, "k-core needs k >= 1")
-    // lazy checkpoints: the count()s materialize them in the same job (one job
-    // per round instead of an eager-checkpoint job THEN a count job — round 7)
-    var e = canonical.select(col("src"), col("dst")).localCheckpoint(false)
+    peel(canonical, maxRounds) { e =>
+      val low = degrees(e).where(col("deg") < k).select(col("v"))
+      e.join(low.withColumnRenamed("v", "src"), Seq("src"), "left_anti")
+        .join(low.withColumnRenamed("v", "dst"), Seq("dst"), "left_anti")
+    }
+  }
+
+  /** Synchronous peel to a fixpoint — the one loop of [[kcoreEdges]] and
+    * [[TriangleCount.ktrussEdges]], which differ only in the drop rule (Cohen,
+    * "Trusses", 2008: the k-core and the k-truss are the same peel on degree
+    * and on triangle support). Each round replaces the (src, dst) edge set
+    * with the rows `keep` returns for it, until the set stops changing,
+    * empties, or `maxRounds` rounds ran. The survivors take a LAZY
+    * `localCheckpoint` that the round's one `count` materializes (one job per
+    * round, not a checkpoint job and then a count job), which also truncates
+    * lineage so a deep peel cannot blow the plan. Whatever `keep` tracks in
+    * [[CacheTracker]] (the truss round's adjacency and block tables) is
+    * released once the round's survivors are materialized, so a deep peel
+    * never churns toward the tracker's eviction bound. `onRoundEnd(round)`
+    * runs after each round. */
+  private[graft] def peel(edges: DataFrame, maxRounds: Int, onRoundEnd: Int => Unit = _ => ())(
+      keep: DataFrame => DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    var e = edges.select(col("src"), col("dst")).localCheckpoint(false)
     var n = e.count()
     var round = 0
     var done = n == 0L
     while (!done && round < maxRounds) {
-      val low = degrees(e).where(col("deg") < k).select(col("v"))
-      val kept = e
-        .join(low.withColumnRenamed("v", "src"), Seq("src"), "left_anti")
-        .join(low.withColumnRenamed("v", "dst"), Seq("dst"), "left_anti")
-        .select(col("src"), col("dst"))
-        .localCheckpoint(false)
+      val snap = CacheTracker.snapshot(spark)
+      val kept = keep(e).select(col("src"), col("dst")).localCheckpoint(false)
       val m = kept.count() // materializes the lazy checkpoint
+      CacheTracker.releaseAddedSince(spark, snap)
       done = m == n || m == 0L
       e = kept
       n = m
       round += 1
+      onRoundEnd(round)
     }
     e
   }

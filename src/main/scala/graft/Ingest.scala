@@ -18,7 +18,10 @@ import org.apache.spark.sql.functions._
   *    stream), exactly expressible in ANSI SQL for the DuckDB oracle.
   *
   * Both produce the canonical undirected simple-edge schema (src: long, dst: long,
-  * src < dst) via [[GraphCore.clean]].
+  * src < dst) via [[GraphCore.clean]]. Every events edge table — plain,
+  * weighted ([[weightedEdgesFromEvents]]), per-day ([[edgesFromEventsDaily]])
+  * and bucketed ([[edgesFromEventsScalable]]) — comes from one lag
+  * derivation ([[lagPairs]]) that takes the window's key columns.
   */
 object Ingest {
 
@@ -36,17 +39,25 @@ object Ingest {
     else spark.read.table(ref)
 
   /** Canonical edges from the `events` table: within each `event_type` stream ordered
-    * by (ts, event_id), each event links its user to the previous event's user.
-    * Deterministic, sparse (≤ one raw pair per event), and 1:1 expressible in DuckDB
-    * SQL — see [[OracleSql.edgesCte]]. */
-  def edgesFromEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    val events = table(spark, sfDir, "events")
-    val w = Window.partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
-    val pairs = events
-      .select(col("event_type"), col("ts"), col("event_id"), col("user_id"))
+    * by (ts, event_id), each event links its user to the previous event's user
+    * ([[lagPairs]]), then [[GraphCore.clean]]. Deterministic, sparse (≤ one raw
+    * pair per event), and 1:1 expressible in DuckDB SQL — see [[OracleSql.edgesCte]]. */
+  def edgesFromEvents(spark: SparkSession, sfDir: String): DataFrame =
+    GraphCore.clean(lagPairs(table(spark, sfDir, "events")))
+
+  /** The events co-occurrence derivation behind every events edge table: within
+    * each (event_type, keys…) window ordered by (ts, event_id), each event's
+    * user paired with the previous event's user — (keys…, src, dst), dst null
+    * on a window's first event. The keys are columns of `events`: none for the
+    * one-graph edges, the day for [[edgesFromEventsDaily]], the time bucket for
+    * [[edgesFromEventsScalable]]'s within-bucket pairs. */
+  private def lagPairs(events: DataFrame, keys: String*): DataFrame = {
+    val kc = keys.map(col)
+    val w = Window.partitionBy(col("event_type") +: kc: _*).orderBy(col("ts"), col("event_id"))
+    events
+      .select(kc ++ Seq(col("event_type"), col("ts"), col("event_id"), col("user_id")): _*)
       .withColumn("prev", lag(col("user_id"), 1).over(w))
-      .select(col("user_id").as("src"), col("prev").as("dst"))
-    GraphCore.clean(pairs)
+      .select(kc :+ col("user_id").as("src") :+ col("prev").as("dst"): _*)
   }
 
   /** Per-conversation summary over the transcripts shape (input_hint schema):
@@ -64,41 +75,24 @@ object Ingest {
 
   /** Per-day twin of [[edgesFromEvents]]: the lag co-occurrence runs inside
     * each (event_type, day) — streams reset at day boundaries, giving one
-    * independent edge set per calendar day, (day, src, dst). The temporal-
-    * analytics input: per-day subgraphs never interact, so every downstream
-    * kernel keyed on `day` is embarrassingly parallel across days and a date
-    * predicate prunes the scan — at 10^12-turn scale the day IS the partition. */
+    * independent edge set per calendar day, (day, src, dst), deduplicated over
+    * all three columns. The temporal-analytics input: per-day subgraphs never
+    * interact, so every downstream kernel keyed on `day` is embarrassingly
+    * parallel across days and a date predicate prunes the scan — at
+    * 10^12-turn scale the day IS the partition. */
   def edgesFromEventsDaily(spark: SparkSession, sfDir: String): DataFrame = {
-    val events = table(spark, sfDir, "events")
-      .select(col("ts").cast("date").as("day"),
-        col("event_type"), col("ts"), col("event_id"), col("user_id"))
-    val w = Window.partitionBy(col("event_type"), col("day"))
-      .orderBy(col("ts"), col("event_id"))
-    val pairs = events
-      .withColumn("prev", lag(col("user_id"), 1).over(w))
-      .select(col("day"), col("user_id").as("src"), col("prev").as("dst"))
-    pairs
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-      .select(col("day"),
-        least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .distinct()
+    val events = table(spark, sfDir, "events").withColumn("day", col("ts").cast("date"))
+    GraphCore.canonicalPairs(lagPairs(events, "day"), "day").distinct()
   }
 
   /** Weighted twin of [[edgesFromEvents]]: the same temporal co-occurrence
     * derivation, keeping the pair multiplicity as the edge weight instead of
-    * deduplicating — (src, dst, w). Repeated co-occurrence is signal (how often
-    * two participants follow each other), and the weighted kernels
-    * ([[PageRank.weightedFixedIterations]]) consume it directly. */
-  def weightedEdgesFromEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    val events = table(spark, sfDir, "events")
-    val w = Window.partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
-    val pairs = events
-      .select(col("event_type"), col("ts"), col("event_id"), col("user_id"))
-      .withColumn("prev", lag(col("user_id"), 1).over(w))
-      .select(col("user_id").as("src"), col("prev").as("dst"))
-    GraphCore.cleanWeighted(pairs)
-  }
+    * deduplicating — (src, dst, w) via [[GraphCore.cleanWeighted]]. Repeated
+    * co-occurrence is signal (how often two participants follow each other),
+    * and the weighted kernels ([[PageRank.weightedFixedIterations]]) consume
+    * it directly. */
+  def weightedEdgesFromEvents(spark: SparkSession, sfDir: String): DataFrame =
+    GraphCore.cleanWeighted(lagPairs(table(spark, sfDir, "events")))
 
   /** Two-level (bucketed) twin of [[edgesFromEvents]] — the scale path for the
     * temporal co-occurrence derivation: [[edgesFromEvents]] windows by
@@ -120,11 +114,7 @@ object Ingest {
       .select(col("event_type"), col("ts"), col("event_id"), col("user_id"))
       .withColumn("us", unix_micros(col("ts").cast("timestamp")))
       .withColumn("bkt", floor(col("us") / bucketUs))
-    val byTypeBkt = Window.partitionBy(col("event_type"), col("bkt"))
-      .orderBy(col("ts"), col("event_id"))
-    val within = events
-      .withColumn("prev", lag(col("user_id"), 1).over(byTypeBkt))
-      .select(col("user_id").as("src"), col("prev").as("dst"))
+    val within = lagPairs(events, "bkt").select(col("src"), col("dst"))
     // per-(type, bucket) first/last user — one row per present bucket, via
     // map-side-combinable min_by/max_by on the (ts, event_id) order key (no
     // extra window sorts over the full event table; the unique key makes the

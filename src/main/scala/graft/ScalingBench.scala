@@ -42,17 +42,15 @@ object ScalingBench {
       // production sizes shards so concurrency blocks fit) — evidences
       // that the beyond-executor-memory plan also completes and scales
       "triangles_sharded" -> (() => {
-        val o = oriented().persist()
-        TriangleCount.globalAdjacencySharded(spark, o,
-          GraphCore.adjacency(o).persist(), 4, concurrency = 2)
+        TriangleCount.globalAdjacencySharded(
+          GraphCore.adjacency(oriented().persist()).persist(), 4, concurrency = 2)
       }),
       // per-vertex out-of-core twin with the same waves: its K is
       // strictly larger (a vertex-sized credit checkpoint per wave), so the
       // wave width matters more here — the W/K row beside triangles_sharded
       "pv_sharded" -> (() => {
-        val o = oriented().persist()
-        TriangleCount.perVertexAdjacencySharded(spark, edges, o,
-          GraphCore.adjacency(o).persist(), 4, concurrency = 2)
+        TriangleCount.perVertexAdjacencySharded(edges,
+          GraphCore.adjacency(oriented().persist()).persist(), 4, concurrency = 2)
       }),
       "pagerank_5iter" -> (() => PageRank.fixedIterations(edges, 5)),
       "components" -> (() => Components.run(edges)),
@@ -95,7 +93,7 @@ object ScalingBench {
       // complete (same contract as the triangles_adj auto-select row)
       "edge_support_auto" -> (() => {
         val o = oriented().persist()
-        TriangleCount.edgeSupport(spark, o, GraphCore.adjacency(o).persist())
+        TriangleCount.edgeSupport(o, GraphCore.adjacency(o).persist())
       }))
   }
 
@@ -147,11 +145,10 @@ object ScalingBench {
     val o = GraphCore.orient(edges, GraphCore.degrees(edges)).persist()
     val adj = GraphCore.adjacency(o).persist()
     val full = TriangleCount.globalAdjacency(spark, o, adj).first().getLong(0)
-    val shd = TriangleCount.globalAdjacencySharded(spark, o, adj, shards).first().getLong(0)
+    val shd = TriangleCount.globalAdjacencySharded(adj, shards).first().getLong(0)
     val pvB = TriangleCount.perVertexAdjacency(edges, o, adj)
     // concurrency 2: the equality evidence also covers the merge across waves
-    val pvS = TriangleCount.perVertexAdjacencySharded(spark, edges, o, adj, shards,
-      concurrency = 2)
+    val pvS = TriangleCount.perVertexAdjacencySharded(edges, adj, shards, concurrency = 2)
     val pvDiff = pvB.withColumnRenamed("tri_cnt", "b")
       .join(pvS.withColumnRenamed("tri_cnt", "s"), Seq("v"), "full")
       .where(col("b").isNull || col("s").isNull || col("b") =!= col("s"))

@@ -128,9 +128,8 @@ object SparkEntry {
     // the path globalAdjacency auto-selects once the CSR outgrows an executor;
     // concurrency 2: the oracle check also covers waves of two block pairs
     "triangles_adj_sharded" -> ((s, d) => {
-      val o = orientedOf(s, d)
-      TriangleCount.globalAdjacencySharded(s, o, CacheTracker.persist(GraphCore.adjacency(o)), 3,
-        concurrency = 2)
+      TriangleCount.globalAdjacencySharded(CacheTracker.persist(GraphCore.adjacency(orientedOf(s, d))),
+        3, concurrency = 2)
     }),
     "triangles_per_vertex" -> ((s, d) =>
       // uses the memoized persisted orientation: trianglesRelational references it
@@ -148,9 +147,8 @@ object SparkEntry {
     // per wave of two block pairs, so no job ever holds more than two adjacency
     // blocks; concurrency 2 value-checks the associative merge across waves
     "triangles_per_vertex_sharded" -> ((s, d) => {
-      val o = orientedOf(s, d)
-      TriangleCount.perVertexAdjacencySharded(s, canonical(s, d), o,
-        CacheTracker.persist(GraphCore.adjacency(o)), 3, concurrency = 2)
+      TriangleCount.perVertexAdjacencySharded(canonical(s, d),
+        CacheTracker.persist(GraphCore.adjacency(orientedOf(s, d))), 3, concurrency = 2)
     }),
     "clustering_coeff" -> ((s, d) => {
       val c = canonical(s, d)
@@ -189,14 +187,14 @@ object SparkEntry {
     // probe as triangles_adj_global minus the reduce; Σ support == triangles
     "edge_support" -> ((s, d) => {
       val o = orientedOf(s, d)
-      TriangleCount.edgeSupport(s, o, CacheTracker.persist(GraphCore.adjacency(o)))
+      TriangleCount.edgeSupport(o, CacheTracker.persist(GraphCore.adjacency(o)))
     }),
     // k-truss peel (k=4, round budget 2): every surviving edge sits in ≥ 2
     // triangles of the surviving subgraph after two peels; the fixed budget
     // makes it expressible as unrolled non-recursive SQL (peel is idempotent
     // at fixpoint, so early convergence yields identical rows)
     "ktruss_edges" -> ((s, d) =>
-      TriangleCount.ktrussEdges(s, orientedOf(s, d), k = 4, maxRounds = 2)),
+      TriangleCount.ktrussEdges(orientedOf(s, d), k = 4, maxRounds = 2)),
     // the day-keyed edge table itself (input of the temporal suite)
     "edges_events_daily" -> ((s, d) => dailyOf(s, d)),
     // per-day triangle counts (temporal clustering evolution): day-keyed

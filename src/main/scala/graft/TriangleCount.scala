@@ -48,25 +48,15 @@ object TriangleCount {
     trianglesRelational(oriented).agg(count(lit(1)).as("triangles"))
 
   /** Per-key (e.g. per-day) triangle counts over a keyed canonical edge table
-    * (key, src, dst) with src < dst: the relational 3-way join with the key in
+    * (key, src, dst) with src < dst: [[trianglesRelational]] with the key in
     * EVERY join condition, so each key's subgraph joins only against itself —
     * the shuffle co-partitions on (key, vertex) and distinct keys proceed in
     * parallel with zero cross-talk (the temporal-analytics shape: clustering
     * evolution over days). Keys whose subgraph closes no triangle keep a 0 row
     * (left join against the distinct key set). Output (key, triangles). */
-  def globalPerKey(keyed: DataFrame, key: String = "day"): DataFrame = {
-    val e1 = keyed.select(col(key).as("k"), col("src").as("a"), col("dst").as("b"))
-    val e2 = keyed.select(col(key).as("k2"), col("src").as("b2"), col("dst").as("c"))
-    val e3 = keyed.select(col(key).as("k3"), col("src").as("a3"), col("dst").as("c3"))
-    val cnt = e1
-      .join(e2, col("k") === col("k2") && col("b") === col("b2"))
-      .join(e3, col("k") === col("k3") && col("a") === col("a3") && col("c") === col("c3"))
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("t"))
-    keyed.select(col(key)).distinct()
-      .join(cnt.select(col("k").as(key), col("t")), Seq(key), "left")
-      .select(col(key), coalesce(col("t"), lit(0L)).as("triangles"))
-  }
+  def globalPerKey(keyed: DataFrame, key: String = "day"): DataFrame =
+    onto(keyed.select(col(key)).distinct(), "triangles")(
+      trianglesRelational(keyed, Seq(key)).groupBy(col(key)).agg(count(lit(1)).as("cnt")))
 
   /** DOULION-style approximate triangle count by deterministic edge
     * sparsification (Tsourakakis et al., KDD'09: keep each edge with
@@ -112,14 +102,20 @@ object TriangleCount {
         (col("triangles") * lit(scale)).as("estimate"))
   }
 
-  /** All triangles as (a, b, c) rows in orientation order (a→b, b→c, a→c). */
-  def trianglesRelational(oriented: DataFrame): DataFrame = {
-    val e1 = oriented.select(col("src").as("a"), col("dst").as("b"))
-    val e2 = oriented.select(col("src").as("b2"), col("dst").as("c"))
-    val e3 = oriented.select(col("src").as("a3"), col("dst").as("c3"))
-    e1.join(e2, col("b") === col("b2"))
-      .join(e3, col("a") === col("a3") && col("c") === col("c3"))
-      .select(col("a"), col("b"), col("c"))
+  /** All triangles as (keys…, a, b, c) rows in orientation order (a→b, b→c,
+    * a→c): the 3-way equi self-join of the oriented edge table. The `keys`
+    * (none: one graph) enter every join condition, so a triangle never spans
+    * two keys. Inside the join they are aliased k0, k1, … per side. */
+  def trianglesRelational(oriented: DataFrame, keys: Seq[String] = Nil): DataFrame = {
+    val ks = keys.indices.map(i => s"k$i")
+    def side(tag: String, src: String, dst: String) =
+      oriented.select(keys.zip(ks).map { case (c, k) => col(c).as(k + tag) } :+
+        col("src").as(src) :+ col("dst").as(dst): _*)
+    def on(tag: String, eqs: Column*) = (ks.map(k => col(k) === col(k + tag)) ++ eqs).reduce(_ && _)
+    side("", "a", "b")
+      .join(side("2", "b2", "c"), on("2", col("b") === col("b2")))
+      .join(side("3", "a3", "c3"), on("3", col("a") === col("a3") && col("c") === col("c3")))
+      .select(keys.zip(ks).map { case (c, k) => col(k).as(c) } ++ Seq(col("a"), col("b"), col("c")): _*)
   }
 
   /** Per-vertex triangle participation counts, including zero rows for vertices in
@@ -154,8 +150,7 @@ object TriangleCount {
 
   /** [[globalAdjacency]] on `shards` × `shards` block-pair tiles, `concurrency`
     * pairs per wave job. */
-  def globalAdjacencySharded(spark: SparkSession, oriented: DataFrame, adj: DataFrame,
-      shards: Int, concurrency: Int = 1): DataFrame =
+  def globalAdjacencySharded(adj: DataFrame, shards: Int, concurrency: Int = 1): DataFrame =
     tiled(adj, globalKernel, Some(Tiles(shards, concurrency)))
 
   /** Per-vertex triangle counts in the adjacency form: for each oriented edge
@@ -168,15 +163,15 @@ object TriangleCount {
     tiled(adj, vertexKernel(canonical), autoTiles(adj))
 
   /** [[perVertexAdjacency]] on `shards` × `shards` block-pair tiles. */
-  def perVertexAdjacencySharded(spark: SparkSession, canonical: DataFrame, oriented: DataFrame,
-      adj: DataFrame, shards: Int, concurrency: Int = 1): DataFrame =
+  def perVertexAdjacencySharded(canonical: DataFrame, adj: DataFrame, shards: Int,
+      concurrency: Int = 1): DataFrame =
     tiled(adj, vertexKernel(canonical), Some(Tiles(shards, concurrency)))
 
   /** Per-edge triangle support: |N⁺(u) ∩ N⁺(v)| for EVERY oriented edge (u, v),
     * zero rows included — the per-edge refinement of the global count
     * (Σ support = triangles). The probe reads only `adj`; `oriented` is the
     * key universe. Output (src, dst, support). */
-  def edgeSupport(spark: SparkSession, oriented: DataFrame, adj: DataFrame): DataFrame =
+  def edgeSupport(oriented: DataFrame, adj: DataFrame): DataFrame =
     tiled(adj, supportKernel(oriented), autoTiles(adj))
 
   /** Per-edge triangle MEMBERSHIP counts — each triangle {u,v,w} credits ALL
@@ -186,7 +181,7 @@ object TriangleCount {
     * edge (u,v) credit (u,v), (u,w) and (v,w) — all of them oriented edges.
     * The probe reads only `adj`; `oriented` is the key universe.
     * Output (src, dst, tri_cnt), zero rows included. */
-  def edgeTriangleCounts(spark: SparkSession, oriented: DataFrame, adj: DataFrame): DataFrame =
+  def edgeTriangleCounts(oriented: DataFrame, adj: DataFrame): DataFrame =
     tiled(adj, membershipKernel(oriented), autoTiles(adj))
 
   // --- kernels: key columns + a credit function over probed rows --------------
@@ -477,44 +472,22 @@ object TriangleCount {
   }
 
   /** k-truss peel: iteratively remove every edge in fewer than k−2 triangles
-    * until the edge set is stable (or `maxRounds`). The orientation is fixed
-    * once — any subgraph of an acyclically-oriented graph stays acyclic, so
-    * triangles keep counting exactly once per round. Because peeling a
-    * fixpoint changes nothing, running with a FIXED `maxRounds` returns the
-    * same rows as `maxRounds` unrolled peels — which is what makes the
-    * registered query oracle-expressible in non-recursive SQL while this
-    * production entry point runs to convergence.
+    * until the edge set is stable (or `maxRounds`) — [[GraphCore.peel]] with
+    * the membership count ([[edgeTriangleCounts]]) as its drop rule. The
+    * orientation is fixed once — any subgraph of an acyclically-oriented graph
+    * stays acyclic, so triangles keep counting exactly once per round. Because
+    * peeling a fixpoint changes nothing, running with a FIXED `maxRounds`
+    * returns the same rows as `maxRounds` unrolled peels — which is what makes
+    * the registered query oracle-expressible in non-recursive SQL while this
+    * production entry point runs to convergence. Each round's adjacency (and,
+    * under a small budget, its block tables) is released once the round's
+    * survivors are materialized; `onRoundEnd` is the test seam that observes it.
     * Output: the surviving oriented edges (src, dst). */
-  def ktrussEdges(spark: SparkSession, oriented: DataFrame, k: Int, maxRounds: Int = 100,
+  def ktrussEdges(oriented: DataFrame, k: Int, maxRounds: Int = 100,
       onRoundEnd: Int => Unit = _ => ()): DataFrame = {
     require(k >= 3, "k-truss needs k >= 3 (k = 2 is the whole graph)")
-    // lazy checkpoints: the count()s materialize them in the same job (one job
-    // per round instead of an eager-checkpoint job THEN a count job — round 7)
-    var e = oriented.select(col("src"), col("dst")).localCheckpoint(false)
-    var n = e.count()
-    var round = 0
-    var done = n == 0L
-    while (!done && round < maxRounds) {
-      // round-scoped cache release (round-6 verdict #5): each round's
-      // edgeTriangleCounts call persists (via ensurePersisted) the fresh
-      // adjacency, and sharded tiles their block tables; once the round's survivor set is
-      // checkpointed and counted nothing references them again — release them
-      // now instead of letting a deep peel accumulate toward CacheTracker's
-      // eviction bound (and from there into silent recompute)
-      val snap = CacheTracker.snapshot(spark)
-      val kept = edgeTriangleCounts(spark, e, GraphCore.adjacency(e))
-        .where(col("tri_cnt") >= k - 2)
-        .select(col("src"), col("dst"))
-        .localCheckpoint(false)
-      val m = kept.count() // materializes the lazy checkpoint
-      CacheTracker.releaseAddedSince(spark, snap)
-      done = m == n || m == 0L
-      e = kept
-      n = m
-      round += 1
-      onRoundEnd(round) // test seam: observe per-round tracked-cache state
-    }
-    e
+    GraphCore.peel(oriented, maxRounds, onRoundEnd)(e =>
+      edgeTriangleCounts(e, GraphCore.adjacency(e)).where(col("tri_cnt") >= k - 2))
   }
 
   /** End-to-end: arbitrary pair table → cleaned → oriented → global count

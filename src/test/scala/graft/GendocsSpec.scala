@@ -42,14 +42,10 @@ class GendocsSpec extends AnyFunSuite {
   }
 
   test("background selectivity: minhash k=13 band buckets stay tiny") {
-    val bands = 16
-    val rows = 4
-    def bandHash(b: Int) =
-      (0 until rows).foldLeft(lit(b.toLong): org.apache.spark.sql.Column)((acc, r) =>
-        pmod(acc * lit(1000003L) + element_at(col("sig"), b * rows + r + 1), lit(1000000007L)))
-    val maxBucket = graft.docs.Dedup.minhashSignatures(corpus, k = 13, perms = 64)
-      .select(posexplode(array((0 until bands).map(bandHash): _*)))
-      .groupBy("pos", "col").count()
+    // the production banding (64 permutations in 16 bands), so the bound
+    // follows any change to the band hash
+    val maxBucket = graft.docs.Dedup.minhashBands(graft.docs.Dedup.shingleSets(corpus, 13), 64, 16)
+      .groupBy("band", "bucket").count()
       .agg(max(col("count"))).first().getLong(0)
     // planted clusters are ~10-12 docs; a degenerate background produced
     // buckets of 60% of the corpus
@@ -57,10 +53,12 @@ class GendocsSpec extends AnyFunSuite {
   }
 
   test("simhash bands stay spread (the token-hash-clustering failure mode)") {
-    val h = graft.docs.Dedup.simhash(corpus)
     // the degenerate corpus put 60% of docs on ONE low-16-bit value (and its
-    // complement); here the largest 16-bit bucket must stay near cluster size
-    val maxLow = h.groupBy(col("simhash").bitwiseAND(lit(0xFFFFL))).count()
+    // complement); here the largest 16-bit bucket must stay near cluster size.
+    // The production banding at maxHamming = 3 cuts four 16-bit bands, band 0
+    // being exactly the low 16 bits
+    val maxLow = graft.docs.Dedup.simhashBands(corpus, maxHamming = 3)
+      .where(col("band") === 0).groupBy(col("bucket")).count()
       .agg(max(col("count"))).first().getLong(0)
     assert(maxLow <= 60L, s"largest low-band bucket $maxLow of $n docs — simhash collapsing")
   }

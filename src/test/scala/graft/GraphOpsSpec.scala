@@ -190,7 +190,7 @@ class GraphOpsSpec extends AnyFunSuite {
     val c = canonical(edges)
     val o = GraphCore.orient(c, GraphCore.degrees(c))
     for (k <- Seq(3, 4)) {
-      val truss = TriangleCount.ktrussEdges(spark, o, k, maxRounds = 50)
+      val truss = TriangleCount.ktrussEdges(o, k, maxRounds = 50)
         .collect().flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
       val core = GraphCore.kcoreVertices(c, k - 1, maxRounds = 50)
         .collect().map(_.getLong(0)).toSet
@@ -550,5 +550,20 @@ class GraphOpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(stats.map(_._2).sum === 20L)
     stats.foreach(s => assert(s._3 >= 0.0))
+  }
+
+  test("cleanWeighted: both directions fold into w, self-loops and null ends drop, clean is its pairs") {
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(1L)), (Some(1L), Some(2L)), (Some(3L), Some(2L)),
+      (Some(4L), Some(4L)), (None, Some(5L)), (Some(6L), None), (None, None))
+      .toDF("src", "dst")
+    val weighted = GraphCore.cleanWeighted(pairs)
+    assert(weighted.columns.toSeq === Seq("src", "dst", "w"))
+    val got = weighted.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    // (1,2), (2,1), (1,2) → one canonical edge seen three times; (3,2) → (2,3)
+    assert(got === Map((1L, 2L) -> 3L, (2L, 3L) -> 1L))
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    assert(sorted(GraphCore.clean(pairs)) === sorted(weighted.drop("w")))
   }
 }

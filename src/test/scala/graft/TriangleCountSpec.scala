@@ -63,7 +63,7 @@ class TriangleCountSpec extends AnyFunSuite {
     val canonical = GraphCore.clean(edgeDF(empty))
     val oriented = GraphCore.orient(canonical, GraphCore.degrees(canonical))
     val pv = TriangleCount.perVertexAdjacencySharded(
-      spark, canonical, oriented, GraphCore.adjacency(oriented), 3)
+      canonical, GraphCore.adjacency(oriented), 3)
     assert(pv.count() === 0L)
     CacheTracker.release(spark)
   }
@@ -83,7 +83,7 @@ class TriangleCountSpec extends AnyFunSuite {
   private def sharded(edges: Seq[(Long, Long)], shards: Int): Long = {
     val oriented = GraphCore.orientClean(edgeDF(edges))
     TriangleCount.globalAdjacencySharded(
-      spark, oriented, GraphCore.adjacency(oriented), shards)
+      GraphCore.adjacency(oriented), shards)
       .first().getLong(0)
   }
 
@@ -281,7 +281,7 @@ class TriangleCountSpec extends AnyFunSuite {
   test("edge support: per-edge counts on nvgraph8, zero rows kept, sum equals the global count") {
     val oriented = GraphCore.orientClean(edgeDF(fixtures.nvgraph8))
     val adj = GraphCore.adjacency(oriented)
-    val sup = TriangleCount.edgeSupport(spark, oriented, adj)
+    val sup = TriangleCount.edgeSupport(oriented, adj)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(sup.size === oriented.count()) // every oriented edge has a row
     assert(sup.values.sum === 3L)         // Σ support = triangle total
@@ -291,7 +291,7 @@ class TriangleCountSpec extends AnyFunSuite {
     val es = Seq.fill(400)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
     val o2 = GraphCore.orientClean(edgeDF(es))
     val total = TriangleCount.globalRelational(o2).first().getLong(0)
-    val sum2 = TriangleCount.edgeSupport(spark, o2, GraphCore.adjacency(o2))
+    val sum2 = TriangleCount.edgeSupport(o2, GraphCore.adjacency(o2))
       .agg(org.apache.spark.sql.functions.sum("support")).first().getLong(0)
     assert(sum2 === total)
   }
@@ -299,19 +299,19 @@ class TriangleCountSpec extends AnyFunSuite {
   test("edge support: sharded twin equals the broadcast form; forced budget auto-selects it") {
     val oriented = GraphCore.orientClean(edgeDF(fixtures.nvgraph8))
     val adj = GraphCore.adjacency(oriented)
-    val want = rows(TriangleCount.edgeSupport(spark, oriented, adj))
+    val want = rows(TriangleCount.edgeSupport(oriented, adj))
     // a 1-byte budget must route through the sharded tiles, rows unchanged
     withConf("spark.graft.maxBroadcastBytes" -> "1") {
-      assert(rows(TriangleCount.edgeSupport(spark, oriented, adj)) === want)
+      assert(rows(TriangleCount.edgeSupport(oriented, adj)) === want)
     }
   }
 
   test("edge membership: sharded twin equals the broadcast form (cross-pair credits re-aggregate)") {
     val oriented = GraphCore.orientClean(edgeDF(fixtures.nvgraph8))
     val adj = GraphCore.adjacency(oriented)
-    val want = rows(TriangleCount.edgeTriangleCounts(spark, oriented, adj))
+    val want = rows(TriangleCount.edgeTriangleCounts(oriented, adj))
     withConf("spark.graft.maxBroadcastBytes" -> "1") {
-      assert(rows(TriangleCount.edgeTriangleCounts(spark, oriented, adj)) === want)
+      assert(rows(TriangleCount.edgeTriangleCounts(oriented, adj)) === want)
     }
   }
 
@@ -319,12 +319,12 @@ class TriangleCountSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(61)
     val oriented = GraphCore.orientClean(edgeDF(
       Seq.fill(400)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong)))).localCheckpoint(true)
-    val want = TriangleCount.ktrussEdges(spark, oriented, 4)
+    val want = TriangleCount.ktrussEdges(oriented, 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     spark.conf.set("spark.graft.maxBroadcastBytes", "1")
     spark.conf.set("spark.graft.pairConcurrency", "2")
     try {
-      val forced = TriangleCount.ktrussEdges(spark, oriented, 4)
+      val forced = TriangleCount.ktrussEdges(oriented, 4)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(forced === want, "every peel round must survive the sharded path")
     } finally {
@@ -345,13 +345,13 @@ class TriangleCountSpec extends AnyFunSuite {
     val oriented = GraphCore.orientClean(edgeDF(es)).localCheckpoint(true)
     val before = CacheTracker.trackedCount(spark)
     val perRound = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val full = TriangleCount.ktrussEdges(spark, oriented, 5,
+    val full = TriangleCount.ktrussEdges(oriented, 5,
         onRoundEnd = _ => perRound += CacheTracker.trackedCount(spark))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(perRound.size >= 5, s"peel must run 5+ rounds, ran ${perRound.size}")
     assert(perRound.forall(_ == before),
       s"round-scoped frames must be released at end of round: $perRound (baseline $before)")
-    val capped = TriangleCount.ktrussEdges(spark, oriented, 5, maxRounds = 4)
+    val capped = TriangleCount.ktrussEdges(oriented, 5, maxRounds = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped !== full, "the peel must still be in motion after 4 rounds")
     assert(full.subsetOf(capped), "later rounds only remove edges")
@@ -360,7 +360,7 @@ class TriangleCountSpec extends AnyFunSuite {
 
   test("edge triangle membership: every triangle credits its three edges (sum = 3x total)") {
     val oriented = GraphCore.orientClean(edgeDF(fixtures.nvgraph8))
-    val cnts = TriangleCount.edgeTriangleCounts(spark, oriented, GraphCore.adjacency(oriented))
+    val cnts = TriangleCount.edgeTriangleCounts(oriented, GraphCore.adjacency(oriented))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(cnts.size === oriented.count())
     assert(cnts.values.sum === 9L) // 3 triangles × 3 edges
@@ -389,7 +389,7 @@ class TriangleCountSpec extends AnyFunSuite {
       val oriented = GraphCore.orientClean(edgeDF(es))
       val want = brute(
         oriented.collect().map(r => (r.getLong(0), r.getLong(1))).toSet, k)
-      val got = TriangleCount.ktrussEdges(spark, oriented, k)
+      val got = TriangleCount.ktrussEdges(oriented, k)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === want, s"k=$k")
       CacheTracker.release(spark)
@@ -406,7 +406,7 @@ class TriangleCountSpec extends AnyFunSuite {
     val es = Seq.fill(600)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
     val oriented = GraphCore.orientClean(edgeDF(es)).localCheckpoint(true)
     val byK = (3 to 6).map { k =>
-      k -> TriangleCount.ktrussEdges(spark, oriented, k)
+      k -> TriangleCount.ktrussEdges(oriented, k)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }.toMap
     (3 to 5).foreach { k =>
@@ -446,9 +446,9 @@ class TriangleCountSpec extends AnyFunSuite {
     def jobs(df: => org.apache.spark.sql.DataFrame): Int = JobCounter(df.collect())._2
     val got = Seq(
       jobs(TriangleCount.globalAdjacency(spark, oriented, adj)),
-      jobs(TriangleCount.globalAdjacencySharded(spark, oriented, adj, 2, 1)),
+      jobs(TriangleCount.globalAdjacencySharded(adj, 2, 1)),
       jobs(TriangleCount.perVertexAdjacency(canonical, oriented, adj)),
-      jobs(TriangleCount.edgeSupport(spark, oriented, adj)))
+      jobs(TriangleCount.edgeSupport(oriented, adj)))
     assert(got === Seq(5, 26, 7, 5), "global / 2-shard global / per-vertex / edge support")
     CacheTracker.release(spark)
   }
